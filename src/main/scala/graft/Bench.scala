@@ -244,13 +244,14 @@ object Bench {
         (sl, sl.collect { case (n, r) if r > 15.0 && small(n) > 0.05 => n }.toSeq.sorted)
       }
     // Post-suite isolated re-measure of the most expensive queries: the
-    // 100+-query suite inflates its heaviest entries (JIT/codegen cache
-    // thrash + ContextCleaner lag — q_pipeline_curate has read 7.4 s in
-    // suite vs 3.6-3.9 s isolated across rounds). Re-timing the top
-    // queries alone at the end, same session, puts the steady-state
-    // number IN the artifact instead of only in ad-hoc dev runs, so a
-    // suite-reading jump can be adjudicated against the same round's
-    // isolated number directly.
+    // 100+-query suite inflates its heaviest entries (JIT code-cache
+    // pressure + ContextCleaner lag — q_pipeline_curate has read 7.4 s in
+    // suite vs 3.6-3.9 s isolated across rounds; the generated-code cache
+    // is sized above the suite's working set, so it does not thrash).
+    // Re-timing the top queries alone at the end, same session, puts the
+    // steady-state number IN the artifact instead of only in ad-hoc dev
+    // runs, so a suite-reading jump can be adjudicated against the same
+    // round's isolated number directly.
     val prev = if (names.isEmpty) previousTimes() else Map.empty[String, Double]
     val isolated: Map[String, Double] =
       if (names.nonEmpty) Map.empty
@@ -333,10 +334,10 @@ object Bench {
     // freshJvmTimes parses its child's line for exactly that.
     val qsOut = (if (names.isEmpty) results.sortBy(-_._2) else results)
       .map { case (k, v) => s"\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
-    // stop BEFORE printing the contract line: Spark's shutdown logging goes
-    // to stderr and must not race a merged-stream capture mid-line
-    spark.stop()
+    // print and flush the contract line BEFORE stopping: a shutdown that
+    // throws must not lose the result
     println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries":$qsOut,"isolated":$isoOut,"isolated_fresh":$isoFreshOut,"slope_flags":$flagsJson,"session":$sessionJson,"value":${jnum(total)}}""")
     System.out.flush()
+    spark.stop()
   }
 }

@@ -1,7 +1,13 @@
 package graft
 
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Session + table plumbing for the graft engine.
   *
@@ -41,8 +47,19 @@ object Graft {
       // build fits memory, and sort-merge remains the fallback.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.ui.enabled", "false")
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
       .getOrCreate()
   }
+
+  /** Size of the JVM-wide generated-code cache. It is a static conf, and
+    * whichever session first triggers codegen fixes it for the JVM, so the
+    * test sessions set it too. Spark's default of 100 is below one batch
+    * task rotation's working set (~240 classes), so at the default the LRU
+    * cycles and every re-run of a query compiles its classes with Janino
+    * again. Measured: one pass over all 121 `SparkEntry.queries` compiles
+    * 1,373 distinct classes at sf0.01 and 1,374 at sf0.1; this is about
+    * three times that. */
+  val CodegenCacheEntries: Int = 4096
 
   /** All driver-provided tables (TESTDATA.md). */
   val tableNames: Seq[String] = Seq(
@@ -51,7 +68,33 @@ object Graft {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else parquet(spark, s"$sfDir/$name.parquet")
+  }
+
+  // session → path → (modification time, inferred schema); sessions are
+  // held weakly so a stopped and dropped session takes its entries along
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, (Long, StructType)]]()
+
+  /** `spark.read.parquet(path)` that infers the schema once per session and
+    * path: a batch task re-reads the same table every period, and Spark's
+    * parquet inference is a job of its own. A later read passes the
+    * remembered schema, so only the file listing repeats. A path whose
+    * modification time changed since (the table rewritten) is inferred
+    * again. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    // no stamp (a missing path, a glob): a plain read, which reports the error
+    val stamp = Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime).toOption
+    val bySession = schemas.synchronized(schemas.computeIfAbsent(spark, _ => mutable.Map.empty))
+    bySession.synchronized(bySession.get(path)) match {
+      case Some((t, schema)) if stamp.contains(t) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        stamp.foreach(t => bySession.synchronized(bySession(path) = (t, df.schema)))
+        df
+    }
   }
 
   /** The events stream table, surfaced with a stable schema regardless of
@@ -67,7 +110,7 @@ object Graft {
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = parquet(spark, s"$sfDir/events.parquet")
     // Same projection under either layout: every raw column with `ts`
     // replaced by `ts_ns` in place, then `time` appended.
     def shaped(tsNs: org.apache.spark.sql.Column): DataFrame =

@@ -473,20 +473,18 @@ object Dedup {
       .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     // size dispatch (the holtWintersAuto pattern), fused to ONE action
-    // (r22, guide §1.2 — serial job count is latency): a bounded ordered
-    // probe of cap+1 edges replaces the count-then-collect pair. orderBy+
-    // limit compiles to TakeOrderedAndProject — a SINGLE job over every
-    // partition (an unordered limit's executeTake would scale up across
-    // 2-4 jobs), and that job also materializes the persist for the
-    // distributed fallback. A probe shorter than cap+1 IS the complete
-    // edge set (union-find labels are component minima — order-free, so
-    // the probe's ordering is irrelevant to the result). The pair graph
+    // (r22, guide §1.2 — serial job count is latency): a bounded probe of
+    // cap+1 edges replaces the count-then-collect pair. The probe is
+    // unordered: union-find labels are component minima, so edge order
+    // cannot change the result, and an ordered probe (TakeOrderedAndProject)
+    // would ship up to cap+1 rows per partition to the driver. A probe
+    // shorter than cap+1 IS the complete edge set. The pair graph
     // is candidates-that-survived-LSH — usually FAR below corpus scale —
     // and under the cap a driver union-find (path compression, min-root
     // reps) labels it in milliseconds where the iterative distributed
     // loop pays multiple Spark jobs per round. 4M edges ≈ 64 MB of longs.
     val probeN = (math.min(maxDriverEdges, (Int.MaxValue - 1).toLong) + 1L).toInt
-    val probe = edges0.orderBy(col("a"), col("b")).limit(probeN).collect()
+    val probe = edges0.limit(probeN).collect()
     if (probe.length < probeN) {
       val spark = pairs.sparkSession
       val parent = scala.collection.mutable.Map.empty[Long, Long]

@@ -685,7 +685,7 @@ object EventQueries4 {
     * loop is verifiable arithmetic, leaving only the HTTP GET as I/O. */
   def scrapeScheduleQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nation = s.read.parquet(s"$dir/nation.parquet")
+    val nation = graft.Graft.table(s, dir, "nation")
     val targets = nation.select(
         col("n_name").as("job"),
         concat(lit("http://"), col("n_name"), lit(":9100/metrics")).as("url"),
@@ -724,7 +724,7 @@ object EventQueries4 {
     * grid alone; this entry pins the whole composition. */
   def scrapeRunQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nation = s.read.parquet(s"$dir/nation.parquet")
+    val nation = graft.Graft.table(s, dir, "nation")
     val targets = nation.select(
         col("n_name").as("job"),
         concat(lit("http://"), col("n_name"), lit(":9100/metrics")).as("url"),

@@ -32,7 +32,7 @@ object FluxQueries {
     * Start (createdAt = lastScheduled) staggered per key; offset key%3. */
   private def taskDefs(s: SparkSession, dir: String) = {
     import s.implicits._
-    s.read.parquet(s"$dir/nation.parquet")
+    graft.Graft.table(s, dir, "nation")
       .select(
         col("n_nationkey").cast("long").as("task_id"),
         when(col("n_nationkey") % 3 === 0,
@@ -149,7 +149,7 @@ object FluxQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ev.createOrReplaceTempView("flux_gate_events")
     val types = Seq("click", "error", "purchase", "signup", "view")
-    val keys = s.read.parquet(s"$dir/region.parquet")
+    val keys = graft.Graft.table(s, dir, "region")
       .select(col("r_regionkey").cast("long")).as[Long].collect().sorted
     // 7-day horizon: ~22 fires across the five tasks — enough to exercise
     // every law the oracle checks (alignment arithmetic for all three

@@ -633,11 +633,16 @@ object FluxTasks {
     // per-task order and complete FSM transitions); the caller awaits
     // workerPool.awaitAll() after advanceTo. Without one, execution stays
     // synchronous inside the scheduler walk (the deterministic default
-    // every spec and the schedule/runs oracles use).
+    // every spec and the schedule/runs oracles use). Either way an
+    // executor error reaches onErr, which pooled fires call from worker
+    // threads.
     val scheduler = new FluxScheduler(
       (id, sf, ra) => workerPool match {
-        case Some(p) => p.submit(id) { executor.execute(id, sf, ra); () }
-        case None    => executor.execute(id, sf, ra); ()
+        case Some(p) => p.submit(id) {
+          try executor.execute(id, sf, ra)
+          catch { case e: Exception => onErr(id, sf, e.getMessage) }
+        }
+        case None => executor.execute(id, sf, ra); ()
       },
       (id, t) => service.updateLastScheduled(id, t),
       onErr)

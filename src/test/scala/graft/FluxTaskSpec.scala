@@ -527,6 +527,38 @@ class FluxTaskSpec extends AnyFunSuite {
     assert(obs.sorted === obsSync.sorted)
     assert(tasks === tasksSync)
   }
+
+  test("worker pool: an executor error reaches onErr exactly as in the synchronous walk") {
+    // A throwing query fails its run; the analytical store then rejects
+    // the failed run, so executor.execute itself throws. The synchronous
+    // walk routes that to onErr; a pooled fire must do the same instead of
+    // leaving it for awaitAll to rethrow.
+    def run(pool: Option[TaskSerialPool]): (Seq[(Long, Long, String)], Seq[Task]) = {
+      val errs = scala.collection.mutable.ArrayBuffer[(Long, Long, String)]()
+      var now = 0L
+      val sys = new FluxTaskSystem(
+        () => now,
+        (task, sf) =>
+          if (task.id == 2 && sf % 120 == 0) throw new RuntimeException(s"boom at $sf")
+          else Right(()),
+        onErr = (id, sf, msg) => errs.synchronized { errs += ((id, sf, msg)) },
+        onRunFinished = r =>
+          if (r.status == RunStatus.Failed)
+            throw new IllegalStateException(s"store rejected run ${r.taskId}@${r.scheduledForS}"),
+        workerPool = pool)
+      for (i <- 1 to 3) sys.createTask(TaskCreate(name = s"t$i", flux = "f", every = "60s"))
+      now = 300L
+      sys.advanceTo(300L)
+      pool.foreach(_.awaitAll())
+      (errs.synchronized(errs.toSeq), sys.service.findTasks())
+    }
+    val (errsSync, tasksSync) = run(None)
+    assert(errsSync === Seq(
+      (2L, 120L, "store rejected run 2@120"), (2L, 240L, "store rejected run 2@240")))
+    val (errsPool, tasksPool) = run(Some(new TaskSerialPool(4)))
+    assert(errsPool.sorted === errsSync)
+    assert(tasksPool === tasksSync)
+  }
 }
 
 /** Spark-side: the distributed fire-time expansion agrees with the

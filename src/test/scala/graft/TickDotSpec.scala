@@ -130,7 +130,10 @@ from1 [avg_exec_time_ns="0s" errors="0" working_cardinality="0" ];
   test("TaskRegistry.dot passes live throughput to the executing view") {
     import org.apache.spark.sql.SparkSession
     val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2).getOrCreate()
+      .config("spark.sql.shuffle.partitions", 2)
+      .config(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        Graft.CodegenCacheEntries.toLong)
+      .getOrCreate()
     import spark.implicits._
     val reg = new graft.tick.TaskRegistry
     reg.define("live", "stream|from().measurement('cpu')")
