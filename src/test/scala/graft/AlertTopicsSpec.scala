@@ -106,7 +106,7 @@ class AlertTopicsSpec extends SparkSpec {
     assert(eArgs.getMessage.contains("changed takes no arguments"))
     // a LoadDir handler spec's match line binds directly
     val reg = new graft.tick.TaskRegistry
-    val loaded = graft.tick.LoadDir.load("/root/reference/examples/load", reg)
+    val loaded = graft.tick.LoadDir.load(RefFixtures.path("examples/load"), reg)
     assert(ev.filter(m(loaded.handlers.head.matchExpr)).count() === 2)
   }
 

@@ -210,7 +210,7 @@ class AutoscaleSpec extends SparkSpec {
     // the ENGINE on the ts_ns axis directly; cooldowns are zero, ordering
     // is all that matters — exactly the reference testcase's config.
     val df = graft.sources.Replay.readSrpl(spark,
-      "/root/reference/integrations/testdata/TestStream_Autoscale.srpl")
+      RefFixtures.testdata("TestStream_Autoscale.srpl"))
     import org.apache.spark.sql.functions._
     val pts = df.select(
         element_at(col("tags"), "deployment").as("resource"),

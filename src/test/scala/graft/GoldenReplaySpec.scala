@@ -61,7 +61,7 @@ class GoldenReplaySpec extends SparkSpec {
     // Expected (from the reference test, first full window):
     //   t=0 bad, t=1 good, t=2 bad, t=5 good, t=7 bad, t=8 good
     val srpl = graft.sources.Replay.readSrpl(spark,
-      "/root/reference/integrations/testdata/TestStream_ChangeDetect.srpl")
+      RefFixtures.testdata("TestStream_ChangeDetect.srpl"))
     // fixture timestamps are whole seconds; the tracked field is a string
     val pts = srpl.select(
       col("measurement"),
@@ -88,7 +88,7 @@ class GoldenReplaySpec extends SparkSpec {
   // httpOut caches the LAST emitted batch, which is what each test compares.
   private def srplValues(name: String, host: String = "serverA") = {
     val df = graft.sources.Replay.readSrpl(spark,
-      s"/root/reference/integrations/testdata/$name.srpl")
+      RefFixtures.testdata(s"$name.srpl"))
       .filter(col("measurement") === "cpu" && expr("tags['host']") === host)
       .select(col("ts_ns").as("ts"), expr("fieldsFloat['value']").as("value"))
     val mn = df.agg(min("ts")).head.getLong(0)
@@ -165,7 +165,7 @@ class GoldenReplaySpec extends SparkSpec {
     * 's'; fixtures carry plain-second timestamps). */
   private def srplRebased(name: String) = {
     val df = graft.sources.Replay.readSrpl(spark,
-      s"/root/reference/integrations/testdata/$name.srpl")
+      RefFixtures.testdata(s"$name.srpl"))
     val mn = df.agg(min("ts_ns")).head.getLong(0)
     df.withColumn("time", timestamp_seconds(col("ts_ns") - mn))
   }
@@ -955,7 +955,7 @@ class GoldenReplaySpec extends SparkSpec {
 
   private def brplRebased(name: String) = {
     val df = graft.sources.Replay.readBrpl(spark,
-      s"/root/reference/integrations/testdata/$name.brpl")
+      RefFixtures.testdata(s"$name.brpl"))
     val mn = df.agg(min(unix_micros(col("time")))).head.getLong(0)
     df.withColumn("time", timestamp_micros(unix_micros(col("time")) - mn))
   }

@@ -14,7 +14,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     * lands on t=0; fixtures carry plain-second timestamps). */
   private def srplRebased(name: String) = {
     val df = graft.sources.Replay.readSrpl(spark,
-      s"/root/reference/integrations/testdata/$name.srpl")
+      RefFixtures.testdata(s"$name.srpl"))
     val mn = df.agg(min("ts_ns")).head.getLong(0)
     df.withColumn("time", timestamp_seconds(col("ts_ns") - mn))
   }
@@ -247,7 +247,7 @@ class GoldenReplaySpec2 extends SparkSpec {
 
   test("TestStream_Sideload_JSON golden: json sources load and overlay identically") {
     val cfg = graft.operators.Sideload.loadDir(spark,
-      "/root/reference/integrations/testdata/sideload")
+      RefFixtures.testdata("sideload"))
     val pts = srplRebased("TestStream_Sideload")
       .filter(col("measurement") === "m")
       .select(col("time"), expr("tags['t0']").as("t0"), expr("tags['t1']").as("t1"),
@@ -375,7 +375,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     try {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/"
       val b = graft.sources.Replay.readBrpl(spark,
-        "/root/reference/integrations/testdata/TestBatch_HttpPost_Timeout.0.brpl")
+        RefFixtures.testdata("TestBatch_HttpPost_Timeout.0.brpl"))
         .select(expr("tags['cpu']").as("cpu"), col("time"),
           expr("CAST(fields['mean'] AS DOUBLE)").as("mean"))
       val t0 = System.nanoTime()
@@ -491,7 +491,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     // emits 0.0 per batch (batcher_test.go er at t=28). Relationally: the
     // pre-filter batch frame left-joins the filtered aggregate.
     val b = graft.sources.Replay.readBrpl(spark,
-      "/root/reference/integrations/testdata/TestBatch_CountEmptyBatch.0.brpl")
+      RefFixtures.testdata("TestBatch_CountEmptyBatch.0.brpl"))
       .select(col("batch_idx"), expr("tags['cpu']").as("cpu"), col("time"),
         expr("CAST(fields['mean'] AS DOUBLE)").as("mean"))
     val batches = b.groupBy("batch_idx", "cpu").agg(max("time").as("tmax"))
@@ -511,7 +511,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     // batch stateCount resets per batch (batcher_test.go:2676-2749): the
     // second batch starts at my_count=1 although the first ended passing
     val b = graft.sources.Replay.readBrpl(spark,
-      "/root/reference/integrations/testdata/TestBatch_StateTracking.0.brpl")
+      RefFixtures.testdata("TestBatch_StateTracking.0.brpl"))
       .select(col("batch_idx"), expr("tags['host']").as("host"), col("time"),
         expr("CAST(fields['value'] AS DOUBLE)").as("value"))
       .filter(col("value").isNotNull) // reference skips field-less points
@@ -533,7 +533,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     // (batcher_test.go:922-960): batch 0 means [null,86,91,87,null] →
     // [90,86,91,87,90] → 444 at the batch time t=8
     val b = graft.sources.Replay.readBrpl(spark,
-      "/root/reference/integrations/testdata/TestBatch_Default.0.brpl")
+      RefFixtures.testdata("TestBatch_Default.0.brpl"))
       .select(col("batch_idx"), col("time"),
         expr("CAST(fields['mean'] AS DOUBLE)").as("mean"))
     val t0 = b.agg(min(unix_timestamp(col("time")))).head.getLong(0)
@@ -555,7 +555,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     // is stamped at the batch time; the 20s window sums the first two
     // counts → 10 at t=28
     def side(i: Int) = graft.sources.Replay.readBrpl(spark,
-      s"/root/reference/integrations/testdata/TestBatch_Join.$i.brpl")
+      RefFixtures.testdata(s"TestBatch_Join.$i.brpl"))
       .select(col("time"), expr("CAST(fields['mean'] AS DOUBLE)").as(s"mean_$i"))
     val a = side(0); val b = side(1)
     val t0 = a.agg(min(unix_timestamp(col("time")))).head.getLong(0)
@@ -578,7 +578,7 @@ class GoldenReplaySpec2 extends SparkSpec {
   // downstream count consumes (batcher_test.go:2019-2116, join.go:547-720)
   private def batchJoinDelimiterGolden(delimiter: String): Unit = {
     def side(i: Int) = Pipe(graft.sources.Replay.readBrpl(spark,
-      s"/root/reference/integrations/testdata/TestBatch_Join.$i.brpl")
+      RefFixtures.testdata(s"TestBatch_Join.$i.brpl"))
       .select(col("time"), expr("CAST(fields['mean'] AS DOUBLE)").as("mean")),
       "time", Nil)
     val joined = side(0).joinMulti(
@@ -612,17 +612,19 @@ class GoldenReplaySpec2 extends SparkSpec {
     // batcher_test.go:64-101: starting the task errors with the exact
     // message; the reference never silently truncates the query
     import graft.tick.TickScript
+    // no row is read: the query text is refused at task start, before the source
+    val points = Seq(("m", new java.sql.Timestamp(0L), 1.0)).toDF("measurement", "time", "value")
     val multi = intercept[IllegalArgumentException] {
       TickScript.compile(
         "batch|query('SELECT value FROM db.rp.m; DROP DATABASE _internal').every(1s)",
-        srplRebased("TestStream_SimpleMR"))
+        points)
     }
     assert(multi.getMessage.contains(
       "query must be a single select statement, got 2 statements"))
     val ddl = intercept[IllegalArgumentException] {
       TickScript.compile(
         "batch|query('DROP DATABASE _internal').every(1s)",
-        srplRebased("TestStream_SimpleMR"))
+        points)
     }
     assert(ddl.getMessage.contains(
       """query is not a select statement "DROP DATABASE _internal""""))
@@ -635,7 +637,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     // emits the winning point with its time and tags. er pins period 2:
     // cpu1, t=18, 95.98484848485191.
     val raw = graft.sources.Replay.readBrpl(spark,
-      "/root/reference/integrations/testdata/TestBatch_SimpleMR.0.brpl")
+      RefFixtures.testdata("TestBatch_SimpleMR.0.brpl"))
       .filter(expr("tags['cpu']") =!= "cpu-total")
       .select(expr("tags['cpu']").as("cpu"), col("time"),
         expr("CAST(fields['mean'] AS DOUBLE)").as("mean"))
@@ -655,7 +657,7 @@ class GoldenReplaySpec2 extends SparkSpec {
 
   test("TestStream_Sideload_Multiple golden: chained sideloads add fields independently") {
     val cfg = graft.operators.Sideload.loadDir(spark,
-      "/root/reference/integrations/testdata/sideload")
+      RefFixtures.testdata("sideload"))
     val pts = srplRebased("TestStream_Sideload")
       .filter(col("measurement") === "m")
       .select(col("time"), expr("tags['t0']").as("t0"), expr("tags['t1']").as("t1"),
@@ -684,7 +686,7 @@ class GoldenReplaySpec2 extends SparkSpec {
 
   private def brplRebased(name: String) = {
     val df = graft.sources.Replay.readBrpl(spark,
-      s"/root/reference/integrations/testdata/$name.brpl")
+      RefFixtures.testdata(s"$name.brpl"))
     val mn = df.agg(min(unix_micros(col("time")))).head.getLong(0)
     df.withColumn("time", timestamp_micros(unix_micros(col("time")) - mn))
   }
@@ -696,7 +698,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     * fixtures' sub-second fractions (x.5 must still round up). */
   private def brplRebasedJoint(names: String*): Seq[org.apache.spark.sql.DataFrame] = {
     val dfs = names.map(n => graft.sources.Replay.readBrpl(spark,
-      s"/root/reference/integrations/testdata/$n.brpl"))
+      RefFixtures.testdata(s"$n.brpl")))
     val mn = dfs.map(_.agg(min(unix_micros(col("time")))).head.getLong(0)).min
     val shift = (mn / 1000000L) * 1000000L
     dfs.map(_.withColumn("time", timestamp_micros(unix_micros(col("time")) - shift)))

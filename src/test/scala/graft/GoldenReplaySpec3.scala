@@ -17,14 +17,14 @@ class GoldenReplaySpec3 extends SparkSpec {
 
   private def srplRebased(name: String) = {
     val df = graft.sources.Replay.readSrpl(spark,
-      s"/root/reference/integrations/testdata/$name.srpl")
+      RefFixtures.testdata(s"$name.srpl"))
     val mn = df.agg(min("ts_ns")).head.getLong(0)
     df.withColumn("time", timestamp_seconds(col("ts_ns") - mn))
   }
 
   private def brplRebased(name: String) = {
     val df = graft.sources.Replay.readBrpl(spark,
-      s"/root/reference/integrations/testdata/$name.brpl")
+      RefFixtures.testdata(s"$name.brpl"))
     val mn = df.agg(min(unix_micros(col("time")))).head.getLong(0)
     df.withColumn("time", timestamp_micros(unix_micros(col("time")) - mn))
   }

@@ -15,14 +15,14 @@ class GoldenReplaySpec4 extends SparkSpec {
 
   private def srplRebased(name: String) = {
     val df = graft.sources.Replay.readSrpl(spark,
-      s"/root/reference/integrations/testdata/$name.srpl")
+      RefFixtures.testdata(s"$name.srpl"))
     val mn = df.agg(min("ts_ns")).head.getLong(0)
     df.withColumn("time", timestamp_seconds(col("ts_ns") - mn))
   }
 
   private def brplRebased(name: String) = {
     val df = graft.sources.Replay.readBrpl(spark,
-      s"/root/reference/integrations/testdata/$name.brpl")
+      RefFixtures.testdata(s"$name.brpl"))
     val mn = df.agg(min(unix_micros(col("time")))).head.getLong(0)
     df.withColumn("time", timestamp_micros(unix_micros(col("time")) - mn))
   }
@@ -36,7 +36,7 @@ class GoldenReplaySpec4 extends SparkSpec {
     // (window.go:122 nextEmit = first+every), so the t=10 emission covers
     // [0,10) = the rebased points {0,1,2,9}.
     val raw = graft.sources.Replay.readSrpl(spark,
-      "/root/reference/integrations/testdata/TestStream_KapacitorLoopback.srpl")
+      RefFixtures.testdata("TestStream_KapacitorLoopback.srpl"))
     val mn = raw.agg(min("ts_ns")).head.getLong(0)
     val src = raw.withColumn("time", timestamp_seconds(col("ts_ns") - mn))
     val scriptLoop =
@@ -76,7 +76,7 @@ class GoldenReplaySpec4 extends SparkSpec {
     // A's emissions: trigger at t=9 flushes [0,5) = {0,1,2}; trigger at
     // t=15 flushes [9,14) = {9,10,11}; t=15 itself never flushes.
     val raw = graft.sources.Replay.readSrpl(spark,
-      "/root/reference/integrations/testdata/TestStream_KapacitorLoopback.srpl")
+      RefFixtures.testdata("TestStream_KapacitorLoopback.srpl"))
     val mn = raw.agg(min("ts_ns")).head.getLong(0)
     val src = raw.withColumn("time", timestamp_seconds(col("ts_ns") - mn))
       .filter(col("measurement") === "cpu")

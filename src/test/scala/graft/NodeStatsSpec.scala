@@ -17,7 +17,7 @@ class NodeStatsSpec extends SparkSpec {
   // the reference replays .srpl at precision "s" (testStreamer) — the
   // recorded integer is SECONDS, not the line-protocol ns default
   private def source = graft.sources.Replay.readSrpl(spark,
-      "/root/reference/integrations/testdata/TestStream_Cardinality.srpl")
+      RefFixtures.testdata("TestStream_Cardinality.srpl"))
     .select(timestamp_seconds(col("ts_ns")).as("time"), col("measurement"),
       expr("tags['host']").as("host"), expr("tags['cpu']").as("cpu"),
       expr("fieldsFloat['usage_user']").as("usage_user"),

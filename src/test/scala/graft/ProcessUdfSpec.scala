@@ -138,7 +138,7 @@ class ProcessUdfSpec extends SparkSpec {
     import graft.tick.TickScript
     import graft.tick.TickScript.Call
     val srpl = graft.sources.Replay.readSrpl(spark,
-      "/root/reference/integrations/testdata/TestStream_CustomFunctions.srpl")
+      RefFixtures.testdata("TestStream_CustomFunctions.srpl"))
     // fixture ticks are raw small ints; the replay harness anchors them on
     // a seconds clock — reinterpret so the 10s window grid matches
     val src = srpl.select(col("measurement"),

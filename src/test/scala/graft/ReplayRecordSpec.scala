@@ -50,7 +50,7 @@ class ReplayRecordSpec extends SparkSpec {
   test("recording a reference fixture is parse-stable (record∘parse idempotent)") {
     val sparkS = spark
     import sparkS.implicits._
-    val fixture = "/root/reference/integrations/testdata/TestStream_Alert.srpl"
+    val fixture = RefFixtures.testdata("TestStream_Alert.srpl")
     def frame(path: String) = Replay.readSrpl(spark, path)
       .select("db", "rp", "measurement", "tags", "fieldsFloat", "ts_ns")
       .as[(String, String, String, Map[String, String], Map[String, Double], Long)]

@@ -8,9 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ServerConfigSpec extends AnyFunSuite {
 
   private lazy val conf = ServerConfig.parse(
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/etc/kapacitor/kapacitor.conf")),
-      "UTF-8"))
+    RefFixtures.read("etc/kapacitor/kapacitor.conf"))
 
   test("the shipped kapacitor.conf loads: top-level keys and section census") {
     val top = conf("").head

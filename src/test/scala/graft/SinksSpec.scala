@@ -127,7 +127,7 @@ class SinksSpec extends SparkSpec {
     // (streamer_test.go TestStream_HttpPost_URL_Template expects
     // /cpu/?host=serverA&cpu=a,b,b,c,c for the first five posts)
     val df = graft.sources.Replay.readSrpl(spark,
-        "/root/reference/integrations/testdata/TestStream_HttpPost_URL_Template.srpl")
+        RefFixtures.testdata("TestStream_HttpPost_URL_Template.srpl"))
       .filter(col("measurement") === "cpu")
       .orderBy("ts_ns")
     val url = graft.sources.Sinks.rowTemplate(

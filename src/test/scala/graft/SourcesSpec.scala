@@ -91,8 +91,7 @@ class SourcesSpec extends SparkSpec {
   test("global deadman: the [deadman] config section end-to-end") {
     import Deadman.{parseConfig, goDuration, parseGoDurationSeconds, GlobalConfig}
     // the reference's own shipped config section parses to its defaults
-    val conf = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/etc/kapacitor/kapacitor.conf")), "UTF-8")
+    val conf = RefFixtures.read("etc/kapacitor/kapacitor.conf")
     val cfg = parseConfig(conf)
     assert((cfg.global, cfg.threshold, cfg.intervalSeconds, cfg.id) ===
       ((false, 0.0, 10L, Deadman.DefaultId)))
@@ -139,14 +138,14 @@ class SourcesSpec extends SparkSpec {
   test("brpl/srpl replay fixtures from the reference parse into point frames") {
     import graft.sources.Replay
     val brpl = Replay.readBrpl(spark,
-      "/root/reference/integrations/testdata/TestBatch_ChangeDetect.0.brpl")
+      RefFixtures.testdata("TestBatch_ChangeDetect.0.brpl"))
     assert(brpl.count() > 0)
     assert(brpl.columns.toSeq == Seq("batch_idx", "name", "tags", "time", "fields"))
     assert(brpl.select("batch_idx").distinct().count() >= 1) // one idx per JSON doc
     assert(brpl.select("name").distinct().as[String].collect().toSet == Set("packets"))
     assert(brpl.select(expr("fields['value']")).as[String].collect().toSet.contains("good"))
 
-    val srplFiles = new java.io.File("/root/reference/integrations/testdata")
+    val srplFiles = new java.io.File(RefFixtures.path("integrations/testdata"))
       .listFiles().filter(_.getName.endsWith(".srpl"))
     assert(srplFiles.nonEmpty)
     val srpl = Replay.readSrpl(spark, srplFiles.head.getAbsolutePath)

@@ -179,7 +179,7 @@ class TaskRegistrySpec extends SparkSpec {
     // vars files (yaml AND json, typed vars), topic handler specs — the
     // reference's shipped example directory, verbatim
     val reg = new TaskRegistry
-    val loaded = graft.tick.LoadDir.load("/root/reference/examples/load", reg)
+    val loaded = graft.tick.LoadDir.load(RefFixtures.path("examples/load"), reg)
     assert(loaded.templateIds.sorted === Seq("base_template", "implicit_template"))
     assert(loaded.taskIds.sorted ===
       Seq("another", "base", "cpu_alert", "implicit", "join", "other", "poll_cpu", "post"))
@@ -212,7 +212,7 @@ class TaskRegistrySpec extends SparkSpec {
     assert(reg.get("base").get.status === reg.Enabled)
     // a RE-load is the reference's update branch: status preserved for
     // both .tick tasks and template-instance vars files
-    graft.tick.LoadDir.load("/root/reference/examples/load", reg)
+    graft.tick.LoadDir.load(RefFixtures.path("examples/load"), reg)
     assert(reg.get("base").get.status === reg.Enabled)
     assert(reg.get("base").get.templateId === Some("base_template"))
   }

@@ -404,9 +404,9 @@ class TickFormatSpec extends AnyFunSuite {
   }
 
   test("reference examples corpus: formats, idempotent, still parses") {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("/root/reference/examples")
+    val root = RefFixtures.root.resolve("examples")
     assume(Files.isDirectory(root))
     val ticks = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".tick")).toSeq.sortBy(_.toString)

@@ -305,9 +305,9 @@ from1
         |httpOut('x')""")
   }
   test("reference examples corpus: marshal fixpoint + regeneration round-trip") {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("/root/reference/examples")
+    val root = RefFixtures.root.resolve("examples")
     assume(Files.isDirectory(root))
     val ticks = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".tick")).toSeq.sortBy(_.toString)

@@ -4,7 +4,7 @@ import graft.tick.TickScript
 import org.apache.spark.sql.functions._
 
 /** Smoke suite over the reference's `examples/` TICKscript corpus
-  * (/root/reference/examples): every .tick file compiles VERBATIM against a
+  * (`examples/` under `$KAPACITOR_REFERENCE`, see [[RefFixtures]]): every .tick file compiles VERBATIM against a
   * synthetic telegraf-shaped frame, exercising var-heavy scripts,
   * multi-sink chains, the deprecated dot-chaining syntax (scores and the
   * telegraf dirs' trailing `alert .log(...)`), template tasks with declared
@@ -20,10 +20,7 @@ import org.apache.spark.sql.functions._
 class TickScriptExamplesSpec extends SparkSpec {
   import spark.implicits._
 
-  private val root = "/root/reference/examples"
-
-  private def read(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$root/$path")), "UTF-8")
+  private def read(path: String): String = RefFixtures.read(s"examples/$path")
 
   /** One wide telegraf-shaped frame: every measurement/tag/field the
     * corpus references, host-tagged, 2 hosts × 60 s. The `tags` map feeds

@@ -358,7 +358,7 @@ class TickScriptSpec extends SparkSpec {
   /** Replay fixture rebased to t=0 (the integration harness's convention). */
   private def srpl(name: String) = {
     val df = graft.sources.Replay.readSrpl(spark,
-      s"/root/reference/integrations/testdata/$name.srpl")
+      RefFixtures.testdata(s"$name.srpl"))
     val mn = df.agg(min("ts_ns")).head.getLong(0)
     df.withColumn("time", timestamp_seconds(col("ts_ns") - mn))
   }
@@ -546,14 +546,14 @@ class TickScriptSpec extends SparkSpec {
   test("the reference TestStream_Sideload script compiles verbatim") {
     // streamer_test.go:12268-12339 (yml order; fields + tag defaults)
     val script =
-      """stream
+      s"""stream
         |	|from()
         |		.database('dbname')
         |		.retentionPolicy('rpname')
         |		.measurement('m')
         |		.groupBy('t0', 't1', 't2')
         |	|sideload()
-        |		.source('file:///root/reference/integrations/testdata/sideload')
+        |		.source('file://${RefFixtures.testdata("sideload")}')
         |		.order('t0/{{.t0}}.yml', 't1/{{.t1}}.yml', 't2/{{.t2}}.yml')
         |		.field('f1', 0)
         |		.field('f2', 0.0)
@@ -607,6 +607,13 @@ class TickScriptSpec extends SparkSpec {
     .filter(col("measurement") === "cpu")
     .select(col("measurement"), col("time"), col("tags"),
       expr("tags['host']").as("host"), expr("fieldsFloat['value']").as("value"))
+
+  // alertFixture's columns and types, two rows: for specs whose assertions
+  // read no row (a definition-time refusal, or a check of the columns only)
+  private def alertShaped = Seq(
+      ("cpu", ts(0), Map("host" -> "serverA"), "serverA", 90.0),
+      ("cpu", ts(10), Map("host" -> "serverB"), "serverB", 10.0))
+    .toDF("measurement", "time", "tags", "host", "value")
 
   test("the reference TestStream_AlertVictorOps script compiles verbatim; payloads render") {
     // streamer_test.go:10258-10330. Service config (URL, api key, routing
@@ -1123,7 +1130,8 @@ class TickScriptSpec extends SparkSpec {
         |		.max(100)
         |	|noOp()
         |""".stripMargin
-    val src = alertFixture.withColumn("pid", monotonically_increasing_id())
+    // only out.columns is read (analysis, no data); the OR is refused at definition
+    val src = alertShaped.withColumn("pid", monotonically_increasing_id())
     val out = TickScript.compile(combineScript, src, idCol = Some("pid"))
     assert(out.columns.contains("a.value") && out.columns.contains("b.value"))
     val orScript =
@@ -1132,7 +1140,7 @@ class TickScriptSpec extends SparkSpec {
         |		.period(10s)
         |		.every(10s)
         |""".stripMargin
-    val e = intercept[IllegalArgumentException](TickScript.compile(orScript, alertFixture))
+    val e = intercept[IllegalArgumentException](TickScript.compile(orScript, alertShaped))
     assert(e.getMessage.contains("AND-ed"))
   }
 
@@ -1304,12 +1312,13 @@ class TickScriptSpec extends SparkSpec {
         |		.database('dbname')
         |		.retentionPolicy('rpname')
         |""".stripMargin
+    // the loop is refused at definition, and the allowed task's check reads only columns
     val e = intercept[IllegalArgumentException](
-      TickScript.compile(loop, alertFixture))
+      TickScript.compile(loop, alertShaped))
     assert(e.getMessage.contains("loop"))
     // a loopback into a DIFFERENT dbrp is fine
     val ok = loop.replace(".database('dbname')", ".database('otherdb')")
-    assert(TickScript.compile(ok, alertFixture).columns.nonEmpty)
+    assert(TickScript.compile(ok, alertShaped).columns.nonEmpty)
   }
 
   test("regex literals lex through backslash-escaped slashes") {
@@ -1439,7 +1448,7 @@ class TickScriptSpec extends SparkSpec {
     // 0,2,4,5,6,8 under the "should we orange juice" vote tag). Here the
     // engine is Catalyst, so the shipped text is Spark SQL over __source.
     val b = graft.sources.Replay.readBrpl(spark,
-      "/root/reference/integrations/testdata/TestBatch_FluxQuery.0.brpl")
+      RefFixtures.testdata("TestBatch_FluxQuery.0.brpl"))
     val src = b.select(col("name").as("measurement"), col("time"),
       element_at(col("fields"), "value").as("value"),
       element_at(col("tags"), "vote").as("vote"))

@@ -13,9 +13,7 @@ import graft.tick.TickVars.Var
 class TickVarsSpec extends AnyFunSuite {
 
   test("the reference load template: every var typed like the API") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/examples/load/templates/base_template.tick")), "UTF-8")
+    val script = RefFixtures.read("examples/load/templates/base_template.tick")
     val vs = TickVars.vars(script).toMap
     assert(vs("measurement") === Var("string", None, ""))
     assert(vs("where_filter") === Var("lambda", Some("TRUE"), ""))
@@ -124,7 +122,7 @@ class TickVarsSpec extends AnyFunSuite {
   test("bound task vars round-trip the load vars-file shape") {
     import graft.tick.TickScript
     val reg = new graft.tick.TaskRegistry
-    graft.tick.LoadDir.load("/root/reference/examples/load", reg)
+    graft.tick.LoadDir.load(RefFixtures.path("examples/load"), reg)
     // the base task was created from base_template with other.json's vars
     val vs = reg.taskVars("base").get.toMap
     assert(vs("measurement") === Var("string", Some("cpu"), ""))
