@@ -135,15 +135,9 @@ object Bench {
         return Map("__fresh_jvm_timeout__" -> -1.0)
       }
       drain.join(10000)
-      val out = outRef.get()
-      // dev mode prints one JSON line {"..","queries":{"name":sec,...},..}.
-      // CONTRACT (shared with previousTimes and the println/writeString
-      // sites below): the queries object is FLAT and is the first {...}
-      // after the "queries" key — keep it that way or switch both parsers
-      // to a real tokenizer.
-      val qobj = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(out).map(_.group(1)).getOrElse("")
-      val parsed = """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(qobj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      // dev mode prints one JSON line carrying the per-query map
+      val parsed = outRef.get().linesIterator.filter(_.startsWith("{")).toSeq
+        .lastOption.map(queryTimes).getOrElse(Map.empty)
       if (p.exitValue() != 0 || parsed.isEmpty) {
         System.err.println(s"[bench] fresh-JVM child exit=${p.exitValue()}, parsed ${parsed.size} queries")
         if (parsed.isEmpty) return Map("__fresh_jvm_failed__" -> p.exitValue().toDouble)
@@ -155,17 +149,28 @@ object Bench {
     }
   }
 
+  /** The `queries` object (name → seconds) of a Bench JSON document: the
+    * stdout line or `bench_times.json`. Empty when the document does not
+    * parse or carries no such object. */
+  private[graft] def queryTimes(doc: String): Map[String, Double] = {
+    import graft.tick.TickJson._
+    try parseJson(doc) match {
+      case JObj(fs) => fs.collectFirst { case ("queries", JObj(qs)) =>
+        qs.collect {
+          case (k, JFloat(v)) => k -> v
+          case (k, JInt(v)) => k -> v.toDouble
+        }.toMap
+      }.getOrElse(Map.empty)
+      case _ => Map.empty
+    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+  }
+
   /** Previous artifact's per-query map (for the >1.5x flagging), read
     * BEFORE this run overwrites the file. */
   private def previousTimes(): Map[String, Double] = try {
     val p = java.nio.file.Paths.get("/root/repo/bench_times.json")
-    if (!java.nio.file.Files.isRegularFile(p)) return Map.empty
-    val s = java.nio.file.Files.readString(p)
-    // Same flat-queries-object regex contract as freshJvmTimes — see the
-    // comment there and at the writeString site.
-    val qobj = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-    """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(qobj)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
+    else queryTimes(java.nio.file.Files.readString(p))
   } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** First three /proc/loadavg fields — session-health evidence so uniform
@@ -284,44 +289,41 @@ object Bench {
         spark.stop()
         freshJvmTimes(flagged, sfDir, repeat = 8)
       }
-    def jnum(v: Double): String = f"$v%.4f"
-    // CONTRACT: the "queries" object in BOTH the stdout line and
-    // bench_times.json must stay flat (string->number only) and be the
-    // first {...} after the "queries" key — previousTimes and
-    // freshJvmTimes parse it with a first-match regex, not a JSON parser.
+    import graft.tick.TickJson.{JArr, JBool, JFloat, JInt, JObj, JStr, JV, obj, writeCompact}
+    // the stdout line and the slopes round to 4 decimals
+    def jnum(v: Double): JV =
+      JFloat(BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    def nums(kvs: Seq[(String, Double)], num: Double => JV): JObj =
+      JObj(kvs.map { case (k, v) => k -> num(v) })
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val flagsJson = flags.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val flagsJson = JArr(flags.map(JStr))
     // session-health evidence (r19 item 5): loadavg + JVM age at both ends
     // of the run make uniform drift adjudicable from the artifact alone
-    val sessionJson =
-      s"""{"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}",""" +
-      s""""jvm_uptime_ms_start":$upStart,"jvm_uptime_ms_end":${jvmUptimeMs()},""" +
-      s""""fresh_loadavg":"$freshLoadavg","fresh_contended":$freshContended}"""
+    val sessionJson = obj(
+      "loadavg_start" -> JStr(loadStart), "loadavg_end" -> JStr(loadavg()),
+      "jvm_uptime_ms_start" -> JInt(upStart), "jvm_uptime_ms_end" -> JInt(jvmUptimeMs()),
+      "fresh_loadavg" -> JStr(freshLoadavg), "fresh_contended" -> JBool(freshContended))
     // only a FULL-suite run owns the artifact — a dev-mode partial run
     // (`runMain graft.Bench q_x repeat=8`) must not clobber the complete
     // per-query map the driver snapshots
     if (names.isEmpty) try {
-      val slopesJson = slopes.toSeq.sorted
-        .map { case (k, v) => s"\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
-      val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
       // suite position per query: a query whose reading is inflated only
       // when it runs late in the slot order is session contamination, not
       // a regression — make that check possible from one artifact
-      val posJson = results.zipWithIndex
-        .map { case ((k, _), i) => s"\"" + k + "\":" + i }.mkString("{", ",", "}")
-      val isoJson = isolated.toSeq.sorted
-        .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val isoFreshJson = isolatedFresh.toSeq.sorted
-        .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+      val positions = JObj(results.zipWithIndex.map { case ((k, _), i) => k -> JInt(i) })
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("/root/repo/bench_times.json"),
-        s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":$fullQs,"positions":$posJson,"isolated":$isoJson,"isolated_fresh":$isoFreshJson,"slopes":$slopesJson,"slope_flags":$flagsJson,"session":$sessionJson}""")
+        writeCompact(obj(
+          "metric" -> JStr("total"), "value" -> JFloat(total), "unit" -> JStr("sec"),
+          "sf" -> JStr(sfDir),
+          "queries" -> nums(results, JFloat),
+          "positions" -> positions,
+          "isolated" -> nums(isolated.toSeq.sorted, JFloat),
+          "isolated_fresh" -> nums(isolatedFresh.toSeq.sorted, JFloat),
+          "slopes" -> nums(slopes.toSeq.sorted, jnum),
+          "slope_flags" -> flagsJson,
+          "session" -> sessionJson)))
     } catch { case _: Throwable => () }
-    val isoOut = isolated.toSeq.sorted
-      .map { case (k, v) => s"\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
-    val isoFreshOut = isolatedFresh.toSeq.sorted
-      .map { case (k, v) => s"\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
     // The stdout line carries the FULL per-query map (r21 verdict item 1:
     // the driver parses per-query perf from this line and does not follow
     // file pointers — the old top-20 + `queries_full` indirection left
@@ -332,11 +334,18 @@ object Bench {
     // bench_times.json, byte-for-byte the same numbers. Dev mode (explicit
     // query names) keeps its complete map on stdout in run order —
     // freshJvmTimes parses its child's line for exactly that.
-    val qsOut = (if (names.isEmpty) results.sortBy(-_._2) else results)
-      .map { case (k, v) => s"\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
+    val qsOut = if (names.isEmpty) results.sortBy(-_._2) else results
     // print and flush the contract line BEFORE stopping: a shutdown that
     // throws must not lose the result
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries":$qsOut,"isolated":$isoOut,"isolated_fresh":$isoFreshOut,"slope_flags":$flagsJson,"session":$sessionJson,"value":${jnum(total)}}""")
+    println(writeCompact(obj(
+      "metric" -> JStr("total"), "unit" -> JStr("sec"), "sf" -> JStr(sfDir),
+      "n_queries" -> JInt(results.size),
+      "queries" -> nums(qsOut, jnum),
+      "isolated" -> nums(isolated.toSeq.sorted, jnum),
+      "isolated_fresh" -> nums(isolatedFresh.toSeq.sorted, jnum),
+      "slope_flags" -> flagsJson,
+      "session" -> sessionJson,
+      "value" -> jnum(total))))
     System.out.flush()
     spark.stop()
   }

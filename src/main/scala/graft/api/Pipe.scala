@@ -451,66 +451,16 @@ final case class Pipe(
 
   // -------------------------------------------------------- flatten/combine
 
-  /** flatten().on(dim) (reference flatten.go:22-254): within a
-    * tolerance-rounded timestamp and the remaining dims, merge points
-    * across `dim` values into one row with per-value columns
-    * `<value>_<field>`. `dimValues` pins the pivot universe so the plan
-    * stays single-pass (Spark's auto-pivot would need a distinct-collect
-    * first — at 100 TB you declare the universe, you don't discover it).
-    * The earliest point per cell wins, on a zero-padded (time,id) string
-    * key that cannot overflow. */
-  def flattenOn(
-      dim: String,
-      dimValues: Seq[String],
-      field: String,
-      toleranceSeconds: Long): Pipe = {
-    val bucket = (floor(unix_micros(t) / 1000000.0 / toleranceSeconds) * toleranceSeconds)
-      .cast("long").as("bucket_s")
-    val ord = format_string("%020d%010d", unix_micros(t),
-      idCol.map(col).getOrElse(lit(0L)))
-    val keys = dims.filterNot(_ == dim).map(col) :+ col("bucket_s")
-    val out = df
-      .withColumn("bucket_s", bucket)
-      .withColumn("__ord", ord)
-      .groupBy(keys: _*)
-      .pivot(dim, dimValues)
-      .agg(min_by(col(field), col("__ord")))
-      .select(keys.map(c => c) ++ dimValues.map(v => col(s"`$v`").as(s"${v}_$field")): _*)
-    copy(df = out, dims = dims.filterNot(_ == dim), timeCol = "bucket_s")
-  }
-
-  /** combine(lambda, lambda) (reference combine.go:142-231): within a
-    * tolerance-rounded timestamp per group, emit every pair of points
-    * where the first matches `predA` and the second `predB`, ordered by
-    * the id tiebreak to avoid duplicates. Expressed as an equi-join on
-    * (group, bucket) — the shuffle is on the bucket key, AQE handles
-    * skewed buckets; no per-group buffering on any single node. */
-  def combinePairs(predA: Column, predB: Column, toleranceSeconds: Long,
-      names: (String, String) = ("a", "b")): DataFrame = {
-    require(idCol.isDefined, "combinePairs needs an id column for ordering")
-    val id = idCol.get
-    val bucket = (floor(unix_micros(t) / 1000000.0 / toleranceSeconds) * toleranceSeconds)
-      .cast("long").as("bucket_s")
-    val base = df.withColumn("bucket_s", bucket)
-    def side(pred: Column, nm: String) = {
-      val dataCols = base.columns.filterNot(c => dims.contains(c) || c == "bucket_s")
-      base.filter(pred).select(
-        (dims.map(col) :+ col("bucket_s")) ++ dataCols.map(c => col(c).as(s"${nm}_$c")): _*)
-    }
-    side(predA, names._1)
-      .join(side(predB, names._2), dims :+ "bucket_s")
-      .filter(col(s"${names._1}_$id") < col(s"${names._2}_$id"))
-  }
-
-  /** flatten().on(dim).fields(f…) — the full reference surface
-    * (flatten.go:53-97): within a tolerance-rounded timestamp and the
-    * remaining dims, merge points across `dim` values into one row whose
-    * columns are `<dimValue><delimiter><field>` for EVERY listed field
-    * (the reference prefixes all fields of the point); with
-    * `dropOriginalFieldName` the column is just `<dimValue>` (single-field
-    * use). Earliest point per cell wins on the overflow-proof (time,id)
-    * string key, like [[flattenOn]]. One pivot pass; the universe is
-    * declared, not discovered. */
+  /** flatten().on(dim).fields(f…) (reference flatten.go:22-254): within
+    * a tolerance-rounded timestamp and the remaining dims, merge points
+    * across `dim` values into one row whose columns are
+    * `<dimValue><delimiter><field>` for EVERY listed field (the reference
+    * prefixes all fields of the point); with `dropOriginalFieldName` the
+    * column is just `<dimValue>` (single-field use). The earliest point
+    * per cell wins, on a zero-padded (time,id) string key that cannot
+    * overflow. One pivot pass: `dimValues` pins the pivot universe
+    * (Spark's auto-pivot would need a distinct-collect first — at 100 TB
+    * you declare the universe, you don't discover it). */
   def flattenOnFields(
       dim: String,
       dimValues: Seq[String],
@@ -554,10 +504,11 @@ final case class Pipe(
     * yields more than `max` k-subsets raise a runtime error through
     * `raise_error`, so the cap costs one count aggregate, not a collect.
     *
-    * Deviation (documented, same as [[combinePairs]]): the reference
-    * assigns lambdas to subset members greedily in buffer order; we pin
-    * the i-th predicate to the i-th member in id order. For identical
-    * predicates (the common "pairs/triples of X" use) the two agree. */
+    * Deviation (documented): the reference assigns lambdas to subset
+    * members greedily in buffer order; we pin the i-th predicate to the
+    * i-th member in id order, the id tiebreak that also keeps each
+    * subset from being emitted twice. For identical predicates (the
+    * common "pairs/triples of X" use) the two agree. */
   def combineK(
       preds: Seq[Column],
       toleranceSeconds: Long,

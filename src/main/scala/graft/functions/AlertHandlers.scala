@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.tick.TickJson
 
 /** Alert handler payload formatters (reference pipeline/alert.go:637-2544
   * and the services packages): the reference's 27 handlers are, at core,
@@ -13,8 +14,11 @@ import org.apache.spark.sql.functions._
   */
 object AlertHandlers {
 
-  private def jsonStr(c: Column): Column =
-    concat(lit("\""), regexp_replace(regexp_replace(c.cast("string"), "\\\\", "\\\\\\\\"), "\"", "\\\\\""), lit("\""))
+  private val jsonStrUdf = udf((s: String) => if (s == null) null else TickJson.escapeGo(s))
+
+  /** A Go json.Marshal string column (quotes included); null stays null.
+    * A UDF like [[goNum]], and on the same per-alert render path. */
+  private def jsonStr(c: Column): Column = jsonStrUdf(c.cast("string"))
 
   /** Generic webhook payload — the reference's httpPost/alert POST body
     * (id, message, level, time, duration). */
@@ -225,27 +229,12 @@ object AlertHandlers {
       lit("}"))
   }
 
-  /** Go json.Marshal float64 rendering (encoding/json floatEncoder):
-    * shortest round-trip digits; plain decimal for 1e-6 ≤ |x| < 1e21
-    * (10.0 → "10", 1e20 → "100000000000000000000"), otherwise 'e' form
-    * with Go's e-0X → e-X cleanup (2.5e-7 → "2.5e-07" → "2.5e-7",
-    * 1e21 → "1e+21"). NaN/±Inf — which json.Marshal refuses outright —
-    * render as JSON null so one bad field cannot invalidate the payload.
-    * Built on Double.toString's round-trip-unique digits. */
-  private[graft] def goJsonFloat(d: Double): String = {
+  /** Go json.Marshal float64 rendering ([[TickJson.goFloat]]), except
+    * that NaN/±Inf — which json.Marshal refuses outright — render as JSON
+    * null so one bad field cannot invalidate the payload. */
+  private[graft] def goJsonFloat(d: Double): String =
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) "null"
-    else if (d == 0.0) { if (1.0 / d < 0) "-0" else "0" }
-    else {
-      val abs = math.abs(d)
-      val bd = new java.math.BigDecimal(java.lang.Double.toString(d)).stripTrailingZeros
-      if (abs < 1e-6 || abs >= 1e21) {
-        val digits = bd.unscaledValue.abs.toString
-        val exp = digits.length - 1 - bd.scale
-        val mant = if (digits.length == 1) digits else s"${digits.head}.${digits.tail}"
-        s"${if (d < 0) "-" else ""}${mant}e${if (exp < 0) "-" else "+"}${math.abs(exp)}"
-      } else bd.toPlainString
-    }
-  }
+    else TickJson.goFloat(d)
 
   private val goNumUdf = udf((d: java.lang.Double) =>
     if (d == null) null else goJsonFloat(d.doubleValue))

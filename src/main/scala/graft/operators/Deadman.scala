@@ -119,18 +119,6 @@ object Deadman {
     ns / 1000000000L
   }
 
-  /** Go time.Duration.String() for whole seconds: the largest unit
-    * leads, every smaller unit follows even when zero (`90s` → `1m30s`,
-    * `3600s` → `1h0m0s`). */
-  private[graft] def goDuration(seconds: Long): String = {
-    val h = seconds / 3600
-    val m = (seconds % 3600) / 60
-    val sec = seconds % 60
-    if (h > 0) s"${h}h${m}m${sec}s"
-    else if (m > 0) s"${m}m${sec}s"
-    else s"${sec}s"
-  }
-
   /** The GLOBAL deadman branch for one task source — what
     * createPipelineAndVars attaches when `[deadman] global = true`
     * (pipeline/pipeline.go:97-107 + node.go:282-312): the throughput
@@ -144,7 +132,8 @@ object Deadman {
     val base = deadman(df, timeUsCol, groupCol,
       cfg.intervalSeconds, math.floor(cfg.threshold).toLong)
     val idTemplate = cfg.id.replace("NODE_NAME", nodeName)
-    val msgTemplate = cfg.message.replace("INTERVAL", goDuration(cfg.intervalSeconds))
+    val msgTemplate = cfg.message.replace("INTERVAL",
+      graft.tick.Cli.goDurationNs(cfg.intervalSeconds * 1000000000L))
     val idCol = AlertTemplates.compile(idTemplate,
       Map("TaskName" -> lit(taskName), "Level" -> col("level")))
     val withId = base.withColumn("id", idCol)

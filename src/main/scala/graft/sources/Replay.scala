@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.tick.TickJson.{JArr, JBool, JFloat, JInt, JNull, JObj, JStr, JV, obj, sortedObj, writeCompact}
 
 /** Readers AND writers for the reference's replay formats
   * (integrations/testdata, replay.go): `.srpl` stream replays —
@@ -174,28 +175,14 @@ object Replay {
     } finally w.close()
   }
 
-  /** Go json.Marshal / json.NewEncoder string escaping, INCLUDING the
-    * default SetEscapeHTML(true): `<`, `>`, `&` render as `<`,
-    * `>`, `&`, so produced bytes are comparable against
-    * reference-written files. Shared with
-    * [[graft.tick.FluxRunStorage]] (run-log JSON). */
-  private[graft] def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '<' => "\\u003c"
-      case '>' => "\\u003e"
-      case '&' => "\\u0026"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Sentinel for Go's zero time (0001-01-01T00:00:00Z, which is out of
-    * int64-nanosecond range) — an unset `tmax`. */
+    * int64-nanosecond range) — an unset time such as a batch's `tmax`. */
   val GoZeroTimeNs: Long = Long.MinValue
 
   /** Go RFC3339Nano (json.Marshal time.Time): trailing zeros stripped
-    * from the fraction, zero time = 0001-01-01T00:00:00Z. */
+    * from the fraction, zero time = 0001-01-01T00:00:00Z. Every Go time
+    * the engine writes (recordings, task and flux-task documents, CLI
+    * and diagnostic output) renders here. */
   private[graft] def rfc3339Nano(ns: Long): String = {
     if (ns == GoZeroTimeNs) return "0001-01-01T00:00:00Z"
     val base = java.time.LocalDateTime.ofEpochSecond(
@@ -208,22 +195,20 @@ object Replay {
       f"T${base.getHour}%02d:${base.getMinute}%02d:${base.getSecond}%02d${frac}Z"
   }
 
-  private def fieldsJson(p: LineProtocol.LinePoint): String = {
-    val entries =
-      (p.fieldsFloat.map { case (k, v) =>
-        k -> graft.functions.AlertHandlers.goJsonFloat(v) } ++
-        p.fieldsInt.map { case (k, v) => k -> v.toString } ++
-        p.fieldsBool.map { case (k, v) => k -> v.toString } ++
-        p.fieldsStr.map { case (k, v) => k -> jsonStr(v) })
-        .toSeq.sortBy(_._1) // Go marshals maps key-sorted
-    if (entries.isEmpty) "null"
-    else entries.map { case (k, v) => s"${jsonStr(k)}:$v" }.mkString("{", ",", "}")
+  /** A point's fields as a Go map (keys sorted); a point without fields
+    * marshals its nil map as `null`. A NaN/±Inf field fails the write,
+    * as json.Encoder fails it. */
+  private def fieldsJson(p: LineProtocol.LinePoint): JV = {
+    val entries: Seq[(String, JV)] =
+      p.fieldsFloat.map { case (k, v) => k -> JFloat(v) }.toSeq ++
+        p.fieldsInt.map { case (k, v) => k -> JInt(v) } ++
+        p.fieldsBool.map { case (k, v) => k -> JBool(v) } ++
+        p.fieldsStr.map { case (k, v) => k -> JStr(v) }
+    if (entries.isEmpty) JNull else sortedObj(entries)
   }
 
-  private def tagsJson(tags: Map[String, String]): String =
-    tags.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
-      .mkString("{", ",", "}")
+  private def tagsJson(tags: Map[String, String]): JObj =
+    sortedObj(tags.toSeq.map { case (k, v) => k -> JStr(v) })
 
   /** WriteBatchForRecording (replay.go:265): one compact
     * `json.Encoder`-style document per batch, newline-terminated —
@@ -232,19 +217,18 @@ object Replay {
     * struct so omitempty never elides it; batch POINTS always carry
     * fields/tags/time, edge/messages.go:720-724). */
   def brplDoc(b: RecordedBatch): String = {
-    val sb = new StringBuilder("{")
-    if (b.name.nonEmpty) sb ++= s""""name":${jsonStr(b.name)},"""
-    sb ++= s""""tmax":${jsonStr(rfc3339Nano(b.tmaxNs))}"""
-    if (b.group.nonEmpty) sb ++= s""","group":${jsonStr(b.group)}"""
-    if (b.byname) sb ++= ""","byname":true"""
-    if (b.tags.nonEmpty) sb ++= s""","tags":${tagsJson(b.tags)}"""
+    val fs = Seq.newBuilder[(String, JV)]
+    if (b.name.nonEmpty) fs += "name" -> JStr(b.name)
+    fs += "tmax" -> JStr(rfc3339Nano(b.tmaxNs))
+    if (b.group.nonEmpty) fs += "group" -> JStr(b.group)
+    if (b.byname) fs += "byname" -> JBool(true)
+    if (b.tags.nonEmpty) fs += "tags" -> tagsJson(b.tags)
     if (b.points.nonEmpty)
-      sb ++= b.points.map(p =>
-        s"""{"fields":${fieldsJson(p)},"tags":${tagsJson(p.tags)}""" +
-          s""","time":${jsonStr(rfc3339Nano(p.timeNs))}}""")
-        .mkString(""","points":[""", ",", "]")
-    sb ++= "}\n"
-    sb.toString
+      fs += "points" -> JArr(b.points.map(p => obj(
+        "fields" -> fieldsJson(p),
+        "tags" -> tagsJson(p.tags),
+        "time" -> JStr(rfc3339Nano(p.timeNs)))))
+    writeCompact(JObj(fs.result())) + "\n"
   }
 
   /** Write a `.brpl` recording: concatenated batch documents in dataset

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.tick.TickJson.escapeGo
 
 /** The reference's output contract: `models.Result{Series: []Row}` with
   * per-(name,tags) series, `time` first column (models/result.go:9-43) —
@@ -36,7 +37,7 @@ object ResultRenderer {
 
   private def jsonValue(v: Any): String = v match {
     case null => "null"
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    case s: String => escapeGo(s)
     case t: java.sql.Timestamp => "\"" + t.toInstant.toString + "\""
     case b: Boolean => b.toString
     case n => n.toString
@@ -46,10 +47,10 @@ object ResultRenderer {
   def toJson(r: Result): String = {
     val series = r.series.map { s =>
       val tags = s.tags.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":${jsonValue(v)}""" }.mkString("{", ",", "}")
-      val cols = s.columns.map(c => s""""$c"""").mkString("[", ",", "]")
+        .map { case (k, v) => s"${escapeGo(k)}:${jsonValue(v)}" }.mkString("{", ",", "}")
+      val cols = s.columns.map(escapeGo).mkString("[", ",", "]")
       val vals = s.values.map(_.map(jsonValue).mkString("[", ",", "]")).mkString("[", ",", "]")
-      s"""{"name":"${s.name}","tags":$tags,"columns":$cols,"values":$vals}"""
+      s"""{"name":${escapeGo(s.name)},"tags":$tags,"columns":$cols,"values":$vals}"""
     }.mkString("[", ",", "]")
     s"""{"series":$series}"""
   }

@@ -1,5 +1,7 @@
 package graft.tick
 
+import graft.sources.Replay
+
 /** The `kapacitor` CLI's human-readable presentation layer as a library
   * (reference `cmd/kapacitor/main.go` — the client-side rendering of the
   * API documents the registry already serves):
@@ -229,7 +231,7 @@ object Cli {
       "id" -> JStr(id),
       "type" -> JStr(typ),
       "size" -> JInt(size),
-      "date" -> JStr(Diag.rfc3339Nano(dateMs * 1000000L)),
+      "date" -> JStr(Replay.rfc3339Nano(dateMs * 1000000L)),
       "error" -> JStr(error),
       "status" -> JStr(status),
       "progress" -> JFloat(progress)))
@@ -251,7 +253,7 @@ object Cli {
       "recording" -> JStr(recording),
       "recording-time" -> JBool(recordingTime),
       "clock" -> JStr(clock),
-      "date" -> JStr(Diag.rfc3339Nano(dateMs * 1000000L)),
+      "date" -> JStr(Replay.rfc3339Nano(dateMs * 1000000L)),
       "error" -> JStr(error),
       "status" -> JStr(status),
       "progress" -> JFloat(progress),
@@ -342,7 +344,7 @@ object Cli {
       "state" -> obj(
         "message" -> JStr(message),
         "details" -> JStr(details),
-        "time" -> JStr(Diag.rfc3339Nano(timeMs * 1000000L)),
+        "time" -> JStr(Replay.rfc3339Nano(timeMs * 1000000L)),
         "duration" -> JStr(goDurationNs(durationNs)),
         "level" -> JStr(level))))
   }

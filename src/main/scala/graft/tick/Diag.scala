@@ -1,5 +1,7 @@
 package graft.tick
 
+import graft.sources.Replay
+
 /** The diagnostic log wire formats and session filtering as a library
   * (reference `services/diagnostic/` — the layer behind `kapacitor logs`
   * and `kapacitor watch`):
@@ -98,8 +100,8 @@ object Diag {
     def json: String = s""""err":${goQuote(s)}"""
   }
   final case class FTime(key: String, epochNanos: Long) extends Field {
-    def logfmt: String = s"$key=${quoteIfNeeded(rfc3339Nano(epochNanos))}"
-    def json: String = s"${goQuote(key)}:${goQuote(rfc3339Nano(epochNanos))}"
+    def logfmt: String = s"$key=${quoteIfNeeded(Replay.rfc3339Nano(epochNanos))}"
+    def json: String = s"${goQuote(key)}:${goQuote(Replay.rfc3339Nano(epochNanos))}"
   }
   final case class FDuration(key: String, nanos: Long) extends Field {
     def logfmt: String = s"$key=${quoteIfNeeded(Cli.goDurationNs(nanos))}"
@@ -135,20 +137,6 @@ object Diag {
     java.time.Instant.ofEpochMilli(epochMs).atOffset(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ofPattern(
         "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"))
-
-  /** Go RFC3339Nano (trailing fraction zeros trimmed). */
-  def rfc3339Nano(epochNanos: Long): String = {
-    val secs = Math.floorDiv(epochNanos, 1000000000L)
-    val nanos = Math.floorMod(epochNanos, 1000000000L)
-    val base = java.time.Instant.ofEpochSecond(secs)
-      .atOffset(java.time.ZoneOffset.UTC)
-      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
-    if (nanos == 0) s"${base}Z"
-    else {
-      val frac = f"$nanos%09d".reverse.dropWhile(_ == '0').reverse
-      s"$base.${frac}Z"
-    }
-  }
 
   /** One logfmt line (log.go writeLogfmt), newline included. */
   def logfmtLine(tsMs: Long, level: String, msg: String,

@@ -33,22 +33,11 @@ object FluxRunStorage {
   val DefaultMeasurement = "runs"
   val DefaultBucket = "kapacitor_fluxtask_logs"
 
-  /** platform.ID rendering: 16 hex digits. */
-  private[tick] def idString(id: Long): String = f"$id%016x"
   private[tick] def idParse(s: String): Long = java.lang.Long.parseUnsignedLong(s, 16)
-
-  private def rfc3339(sec: Long): String = Replay.rfc3339Nano(sec * 1000000000L)
-
-  // Go json.Marshal escaping (incl. default HTML escaping) — one
-  // implementation, shared with the replay writers
-  private def jsonStr(s: String): String = Replay.jsonStr(s)
 
   /** taskmodel.Log array JSON (json.Marshal field order/omitempty). */
   private[tick] def logsJson(logs: Seq[FluxTasks.RunLog]): String =
-    logs.map { l =>
-      val rid = if (l.runId != 0) s""""runID":${jsonStr(idString(l.runId))},""" else ""
-      s"""{$rid"time":${jsonStr(rfc3339(l.timeS))},"message":${jsonStr(l.message)}}"""
-    }.mkString("[", ",", "]")
+    TickJson.writeCompact(TickJson.JArr(logs.map(FluxTaskJson.logJson)))
 
   /** run_recorder.go:30-76 Record — one point per finished run. Times
     * render at the reference's field precisions (Nano for started/
@@ -58,18 +47,18 @@ object FluxRunStorage {
       run: FluxTasks.Run,
       measurement: String = DefaultMeasurement): LineProtocol.LinePoint = {
     def t(o: Option[Long]): String =
-      o.map(rfc3339).getOrElse("0001-01-01T00:00:00Z")
+      Replay.rfc3339Nano(o.fold(Replay.GoZeroTimeNs)(_ * 1000000000L))
     LineProtocol.LinePoint(
       measurement = measurement,
-      tags = Map("status" -> run.status, "taskID" -> idString(run.taskId)),
+      tags = Map("status" -> run.status, "taskID" -> FluxTaskJson.idStr(run.taskId)),
       fieldsFloat = Map.empty,
       fieldsInt = Map.empty,
       fieldsBool = Map.empty,
       fieldsStr = Map(
-        "runID" -> idString(run.id),
+        "runID" -> FluxTaskJson.idStr(run.id),
         "startedAt" -> t(run.startedAtS),
         "finishedAt" -> t(run.finishedAtS),
-        "scheduledFor" -> rfc3339(run.scheduledForS),
+        "scheduledFor" -> Replay.rfc3339Nano(run.scheduledForS * 1000000000L),
         "requestedAt" -> t(run.requestedAtS),
         "logs" -> logsJson(run.logs)),
       timeNs = run.startedAtS.getOrElse(0L) * 1000000000L)
@@ -150,7 +139,7 @@ object FluxRunStorage {
       val after = afterTimeS.getOrElse(Long.MinValue)
       val history = recorded.toSeq
         .filter(p => p.measurement == measurement &&
-          p.tags.get("taskID").contains(idString(taskId)))
+          p.tags.get("taskID").contains(FluxTaskJson.idStr(taskId)))
         .map(readRun)
         .filter(r => r.scheduledForS > after && r.scheduledForS < before)
         .sortBy(-_.scheduledForS)
@@ -173,7 +162,7 @@ object FluxRunStorage {
   def findRunsFrame(history: DataFrame, taskId: Long, limit: Int = 100): DataFrame =
     history
       .filter(col("measurement") === DefaultMeasurement &&
-        element_at(col("tags"), "taskID") === idString(taskId))
+        element_at(col("tags"), "taskID") === FluxTaskJson.idStr(taskId))
       .select(
         element_at(col("fieldsStr"), "runID").as("run_id"),
         element_at(col("tags"), "taskID").as("task_id"),

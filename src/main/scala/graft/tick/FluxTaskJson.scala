@@ -1,6 +1,7 @@
 package graft.tick
 
 import graft.tick.FluxTasks.{Run, RunLog, Task, TaskFilter}
+import graft.sources.Replay.rfc3339Nano
 import graft.tick.TickJson._
 
 /** The flux-task HTTP API's wire documents (reference
@@ -38,11 +39,6 @@ object FluxTaskJson {
 
   /** platform.ID.String(): 16 zero-padded hex digits. */
   def idStr(id: Long): String = f"$id%016x"
-
-  /** RFC3339 at seconds (time.RFC3339 of a whole-second time). */
-  def rfc3339(epochS: Long): String =
-    java.time.format.DateTimeFormatter.ISO_INSTANT.format(
-      java.time.Instant.ofEpochSecond(epochS))
 
   /** `customParseDuration` (:287-320): hours/minutes/seconds fold with
     * the reference's early returns — `""` for zero, `-` prefix, whole
@@ -87,11 +83,11 @@ object FluxTaskJson {
     if (t.offsetS != 0)
       fs += "offset" -> JStr(customParseDuration(t.offsetS * 1000000000L))
     if (t.latestCompletedS != 0)
-      fs += "latestCompleted" -> JStr(rfc3339(t.latestCompletedS))
+      fs += "latestCompleted" -> JStr(rfc3339Nano(t.latestCompletedS * 1000000000L))
     if (t.lastRunStatus.nonEmpty) fs += "lastRunStatus" -> JStr(t.lastRunStatus)
     if (t.lastRunError.nonEmpty) fs += "lastRunError" -> JStr(t.lastRunError)
-    if (t.createdAtS != 0) fs += "createdAt" -> JStr(rfc3339(t.createdAtS))
-    if (t.updatedAtS != 0) fs += "updatedAt" -> JStr(rfc3339(t.updatedAtS))
+    if (t.createdAtS != 0) fs += "createdAt" -> JStr(rfc3339Nano(t.createdAtS * 1000000000L))
+    if (t.updatedAtS != 0) fs += "updatedAt" -> JStr(rfc3339Nano(t.updatedAtS * 1000000000L))
     if (metadata.nonEmpty) fs += "metadata" -> sortedObj(metadata)
     fs.result()
   }
@@ -156,10 +152,12 @@ object FluxTaskJson {
       "tasks" -> JArr(docs))))
   }
 
-  private def logJson(l: RunLog): JV = {
+  /** One taskmodel.Log; also the element of the recorded run-log array
+    * ([[FluxRunStorage.logsJson]]). */
+  private[tick] def logJson(l: RunLog): JV = {
     val fs = Seq.newBuilder[(String, JV)]
     if (l.runId != 0) fs += "runID" -> JStr(idStr(l.runId))
-    fs += "time" -> JStr(rfc3339(l.timeS))
+    fs += "time" -> JStr(rfc3339Nano(l.timeS * 1000000000L))
     fs += "message" -> JStr(l.message)
     JObj(fs.result())
   }
@@ -176,10 +174,10 @@ object FluxTaskJson {
     if (r.id != 0) fs += "id" -> JStr(rid)
     fs += "taskID" -> JStr(tid)
     fs += "status" -> JStr(r.status)
-    fs += "scheduledFor" -> JStr(rfc3339(r.scheduledForS)) // pointer: always
-    r.startedAtS.foreach(t => fs += "startedAt" -> JStr(rfc3339(t)))
-    r.finishedAtS.foreach(t => fs += "finishedAt" -> JStr(rfc3339(t)))
-    r.requestedAtS.foreach(t => fs += "requestedAt" -> JStr(rfc3339(t)))
+    fs += "scheduledFor" -> JStr(rfc3339Nano(r.scheduledForS * 1000000000L)) // pointer: always
+    r.startedAtS.foreach(t => fs += "startedAt" -> JStr(rfc3339Nano(t * 1000000000L)))
+    r.finishedAtS.foreach(t => fs += "finishedAt" -> JStr(rfc3339Nano(t * 1000000000L)))
+    r.requestedAtS.foreach(t => fs += "requestedAt" -> JStr(rfc3339Nano(t * 1000000000L)))
     if (r.logs.nonEmpty) fs += "log" -> JArr(r.logs.map(logJson))
     JObj(fs.result())
   }

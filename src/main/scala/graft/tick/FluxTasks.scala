@@ -144,12 +144,15 @@ object FluxTasks {
     * `:last_success`. An execution that THROWS (the reference's
     * unrecovered panic) is remembered and rethrown at [[awaitAll]]; later
     * fires of the task still run, matching the scheduler's onErr law
-    * (executor errors do not stop the schedule). */
+    * (executor errors do not stop the schedule).
+    *
+    * The pool is one-shot: [[awaitAll]] shuts its threads down, and a
+    * [[submit]] after that throws `RejectedExecutionException`. */
   final class TaskSerialPool(threads: Int) {
     require(threads > 0, "worker pool needs at least one thread")
     private val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     private val tails = mutable.Map.empty[Long, java.util.concurrent.CompletableFuture[Void]]
-    private val failure = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
+    private val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
 
     /** Enqueue `body` to run after every previously-submitted body for the
       * same task id (strict per-id serial order, cross-id concurrent).
@@ -159,9 +162,9 @@ object FluxTasks {
         java.util.concurrent.CompletableFuture.completedFuture(null: Void))
       val next = prev.thenRunAsync(() => body, pool)
       // keep the chain alive past a thrown body so later fires still run;
-      // remember the FIRST failure for awaitAll's rethrow
+      // remember every failure, in completion order, for awaitAll
       tails(taskId) = next.exceptionally { e =>
-        failure.compareAndSet(null,
+        failures.add(
           if (e.isInstanceOf[java.util.concurrent.CompletionException] && e.getCause != null)
             e.getCause else e)
         null
@@ -169,12 +172,16 @@ object FluxTasks {
     }
 
     /** Block until every submitted execution finished, release the
-      * threads, and rethrow the first execution failure (if any). */
+      * threads, and rethrow the first execution failure (if any) with
+      * every later failure attached via `addSuppressed`. */
     def awaitAll(): Unit = {
       try tails.values.foreach(_.join())
       finally pool.shutdown()
-      val e = failure.get()
-      if (e != null) throw e
+      val first = failures.poll()
+      if (first != null) {
+        failures.forEach(e => if (e ne first) first.addSuppressed(e))
+        throw first
+      }
     }
   }
 
@@ -185,7 +192,12 @@ object FluxTasks {
     * Methods are `synchronized` (each is one short kv transaction) so a
     * [[TaskSerialPool]]-driven executor can fold concurrent runs of
     * DIFFERENT tasks into the store safely; per-task sequencing is the
-    * pool's job, not the lock's. */
+    * pool's job, not the lock's.
+    *
+    * The control plane (create/update/delete of tasks) must have a
+    * single writer that does not edit a task while its pooled runs are in
+    * flight: a pooled run reads its task and then runs the query outside
+    * the lock, so a concurrent edit could land between the two. */
   final class FluxTaskService(clock: () => Long) {
     private var nextId = 1L
     private val tasks = mutable.LinkedHashMap[Long, Task]()
@@ -616,7 +628,11 @@ object FluxTasks {
 
   /** coordinator.go + services/fluxtask/service.go — the composition
     * root: a service, an executor over `runQuery`, and a scheduler wired
-    * through the coordinator notifications. */
+    * through the coordinator notifications.
+    *
+    * With a `workerPool`, runs read `clock` from the pool's threads, so a
+    * stepped clock (`now = x; advanceTo(x)`) must not move until
+    * `workerPool.awaitAll()` returns. */
   final class FluxTaskSystem(
       val clock: () => Long,
       runQuery: QueryRunner,

@@ -1,5 +1,6 @@
 package graft.tick
 
+import graft.sources.Replay
 import org.apache.spark.sql.DataFrame
 
 /** Task lifecycle as a library API — the reference's task_store service
@@ -235,21 +236,10 @@ class TaskRegistry {
   def templateScript(id: String, scriptFormat: String = "formatted"): Option[String] =
     synchronized(templates.get(id)).map(t => renderScript(t.tickscript, scriptFormat))
 
-  /** Go `time.Time` RFC3339Nano JSON rendering from epoch millis: the
-    * zero time marshals as year 1, fractional seconds trim trailing
-    * zeros (client task documents — Created/Modified/LastEnabled). */
-  private def goTimeJson(ms: Long): String = {
-    if (ms == 0L) return "0001-01-01T00:00:00Z"
-    val inst = java.time.Instant.ofEpochMilli(ms).atOffset(java.time.ZoneOffset.UTC)
-    val base = inst.format(java.time.format.DateTimeFormatter.ofPattern(
-      "yyyy-MM-dd'T'HH:mm:ss"))
-    val nanos = inst.getNano
-    if (nanos == 0) s"${base}Z"
-    else {
-      val frac = f"$nanos%09d".reverse.dropWhile(_ == '0').reverse
-      s"$base.${frac}Z"
-    }
-  }
+  /** A registry timestamp (epoch ms) as the epoch-nanos `time.Time` the
+    * client documents marshal: 0 ms is the unset zero time. */
+  private def goTimeNs(ms: Long): Long =
+    if (ms == 0L) Replay.GoZeroTimeNs else ms * 1000000L
 
   /** The full `kapacitor show` / task-GET wire document
     * (client/v1/client.go:832-848 Task struct, field order exact;
@@ -259,7 +249,6 @@ class TaskRegistry {
   def taskJson(id: String, basePath: String = "/kapacitor/v1"): Option[String] = {
     import TickJson._
     synchronized(tasks.get(id)).map { t =>
-      val vars = TickJson.parseJson(taskVarsJson(id).getOrElse("{}"))
       write(obj(
         "link" -> obj("rel" -> JStr("self"),
           "href" -> JStr(s"$basePath/tasks/${t.id}")),
@@ -269,15 +258,15 @@ class TaskRegistry {
         "dbrps" -> JArr(t.dbrps.map { case (db, rp) =>
           obj("db" -> JStr(db), "rp" -> JStr(rp)) }),
         "script" -> JStr(script(t.id).getOrElse(t.tickscript)),
-        "vars" -> vars,
+        "vars" -> TickVars.varsObj(taskVars(t.id).getOrElse(Nil)),
         "dot" -> JStr(dot(t.id).getOrElse("")),
         "status" -> JStr(if (t.status == Enabled) "enabled" else "disabled"),
         "executing" -> JBool(t.status == Enabled),
         "error" -> JStr(t.error),
         "stats" -> obj(),
-        "created" -> JStr(goTimeJson(t.createdMs)),
-        "modified" -> JStr(goTimeJson(t.modifiedMs)),
-        "last-enabled" -> JStr(goTimeJson(t.lastEnabledMs))))
+        "created" -> JStr(Replay.rfc3339Nano(goTimeNs(t.createdMs))),
+        "modified" -> JStr(Replay.rfc3339Nano(goTimeNs(t.modifiedMs))),
+        "last-enabled" -> JStr(Replay.rfc3339Nano(goTimeNs(t.lastEnabledMs)))))
     }
   }
 
@@ -286,18 +275,17 @@ class TaskRegistry {
   def templateJson(id: String, basePath: String = "/kapacitor/v1"): Option[String] = {
     import TickJson._
     synchronized(templates.get(id)).map { t =>
-      val vars = TickJson.parseJson(templateVarsJson(id).getOrElse("{}"))
       write(obj(
         "link" -> obj("rel" -> JStr("self"),
           "href" -> JStr(s"$basePath/templates/${t.id}")),
         "id" -> JStr(t.id),
         "type" -> JStr(if (t.taskType == StreamTask) "stream" else "batch"),
         "script" -> JStr(templateScript(t.id).getOrElse(t.tickscript)),
-        "vars" -> vars,
+        "vars" -> TickVars.varsObj(templateVars(t.id).getOrElse(Nil)),
         "dot" -> JStr(TickDot.dot(t.tickscript, t.id)),
         "error" -> JStr(""),
-        "created" -> JStr(goTimeJson(t.createdMs)),
-        "modified" -> JStr(goTimeJson(t.createdMs))))
+        "created" -> JStr(Replay.rfc3339Nano(goTimeNs(t.createdMs))),
+        "modified" -> JStr(Replay.rfc3339Nano(goTimeNs(t.createdMs)))))
     }
   }
 
@@ -352,12 +340,6 @@ class TaskRegistry {
   def taskVars(id: String): Option[Seq[(String, TickVars.Var)]] =
     synchronized(tasks.get(id)).map { t =>
       TickVars.boundVars(t.vars, TickScript.parse(t.tickscript).declared)
-    }
-
-  /** [[taskVars]] rendered as the wire JSON object. */
-  def taskVarsJson(id: String): Option[String] =
-    synchronized(tasks.get(id)).map { t =>
-      TickVars.boundVarsJson(t.vars, TickScript.parse(t.tickscript).declared)
     }
 
   private def renderScript(raw: String, scriptFormat: String): String =

@@ -89,7 +89,7 @@ object TickJson {
     case JBool(b) => sb ++= (if (b) "true" else "false")
     case JInt(l) => sb.append(l)
     case JFloat(d) => sb ++= goFloat(d)
-    case JStr(s) => escapeGo(sb, s)
+    case JStr(s) => sb ++= escapeGo(s)
     case JArr(vs) =>
       if (vs.isEmpty) sb ++= "[]"
       else {
@@ -106,7 +106,7 @@ object TickJson {
       else {
         sb ++= "{\n"
         fs.zipWithIndex.foreach { case ((k, x), i) =>
-          indent(sb, depth + 1); escapeGo(sb, k); sb ++= ": "
+          indent(sb, depth + 1); sb ++= escapeGo(k); sb ++= ": "
           writeVal(sb, x, depth + 1)
           if (i < fs.size - 1) sb += ','
           sb += '\n'
@@ -127,7 +127,7 @@ object TickJson {
       case JBool(b) => sb ++= (if (b) "true" else "false")
       case JInt(l) => sb.append(l)
       case JFloat(d) => sb ++= goFloat(d)
-      case JStr(s) => escapeGo(sb, s)
+      case JStr(s) => sb ++= escapeGo(s)
       case JArr(vs) =>
         sb += '['
         vs.zipWithIndex.foreach { case (e, i) =>
@@ -137,7 +137,7 @@ object TickJson {
       case JObj(fs) =>
         sb += '{'
         fs.zipWithIndex.foreach { case ((k, e), i) =>
-          if (i > 0) sb += ','; escapeGo(sb, k); sb += ':'; go(e)
+          if (i > 0) sb += ','; sb ++= escapeGo(k); sb += ':'; go(e)
         }
         sb += '}'
     }
@@ -145,9 +145,12 @@ object TickJson {
     sb.toString
   }
 
-  /** Go encoding/json string escaping: `"` `\` control chars, and the
-    * HTML-safe escapes for `<` `>` `&` (and U+2028/U+2029). */
-  private def escapeGo(sb: StringBuilder, s: String): Unit = {
+  /** Go encoding/json string escaping, quotes included: `"` `\` control
+    * chars, and the HTML-safe escapes for `<` `>` `&` (and U+2028/U+2029).
+    * The one JSON string encoder: every Go wire document, recording and
+    * alert payload goes through it. */
+  def escapeGo(s: String): String = {
+    val sb = new StringBuilder(s.length + 2)
     sb += '"'
     s.foreach {
       case '"' => sb ++= "\\\""
@@ -163,15 +166,17 @@ object TickJson {
       case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
       case c => sb += c
     }
-    sb += '"'
+    (sb += '"').toString
   }
 
   /** Go json float formatting: 'f' (plain, shortest digits) for
-    * 1e-6 ≤ |x| < 1e21, 'e' with `e+NN`/`e-N` styling outside. */
+    * 1e-6 ≤ |x| < 1e21, 'e' with `e+NN`/`e-N` styling outside; negative
+    * zero keeps its sign (`-0`). NaN/±Inf are refused, as json.Marshal
+    * refuses them. */
   def goFloat(d: Double): String = {
     if (d.isNaN || d.isInfinite)
       throw new IllegalArgumentException(s"json: unsupported value: $d")
-    if (d == 0.0) return "0"
+    if (d == 0.0) return if (1.0 / d < 0) "-0" else "0"
     val abs = math.abs(d)
     val shortest = java.lang.Double.toString(d) // shortest-round-trip repr
     if (abs >= 1e-6 && abs < 1e21) {
@@ -373,8 +378,7 @@ object TickJson {
           a.src = Node("alert", Nil, nd.props)
           a.synth = Some(AlertSynth(
             id = deadman.id.replaceFirst("NODE_NAME", java.util.regex.Matcher.quoteReplacement(obsName)),
-            message = deadman.message.replaceFirst("INTERVAL",
-              graft.operators.Deadman.goDuration(ns / 1000000000L)),
+            message = deadman.message.replaceFirst("INTERVAL", Cli.goDurationNs(ns)),
             crit = crit))
           cur = a
         case "join" | "union" =>

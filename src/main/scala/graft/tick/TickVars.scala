@@ -1,5 +1,7 @@
 package graft.tick
 
+import graft.tick.TickJson.{JArr, JBool, JFloat, JInt, JNull, JObj, JStr, JV, obj, writeCompact}
+
 /** The template-vars API surface — the `vars` field of template (and
   * task) GET responses: every var a TICKscript defines or declares,
   * typed as the client wire shape `{"type": t, "value": v,
@@ -68,30 +70,26 @@ object TickVars {
   /** The vars map as the API's JSON object (key order = declaration
     * order; Go maps are unordered, so byte-for-byte key order is not a
     * reference law — the per-var object shape is). */
-  def varsJson(script: String): String =
-    vars(script).map { case (name, v) =>
-      s"${jstr(name)}:${varJson(v)}"
-    }.mkString("{", ",", "}")
+  def varsJson(script: String): String = writeCompact(varsObj(vars(script)))
 
-  private def varJson(v: Var): String = {
+  /** Vars as the wire object the task and template GET documents embed. */
+  def varsObj(vs: Seq[(String, Var)]): JObj =
+    JObj(vs.map { case (name, v) => name -> varJson(v) })
+
+  private def varJson(v: Var): JV = {
     val value = v.value match {
-      case None => "null"
-      case Some(b: Boolean) => b.toString
-      case Some(l: Long) => l.toString
-      case Some(d: Double) => graft.sources.Replay.lineFloat(d)
-      case Some(s: String) => jstr(s)
+      case None => JNull
+      case Some(b: Boolean) => JBool(b)
+      case Some(l: Long) => JInt(l)
+      case Some(d: Double) => JFloat(d)
       case Some(items: Seq[_]) =>
-        items.map {
-          case (t: String, value: Any) =>
-            s"""{"type":${jstr(t)},"value":${value match {
-              case s: String => jstr(s)
-              case other => other.toString
-            }}}"""
-          case other => jstr(other.toString)
-        }.mkString("[", ",", "]")
-      case Some(other) => jstr(other.toString)
+        JArr(items.map {
+          case (t: String, value: Any) => obj("type" -> JStr(t), "value" -> JStr(value.toString))
+          case other => JStr(other.toString)
+        })
+      case Some(other) => JStr(other.toString)
     }
-    s"""{"type":${jstr(v.tpe)},"value":$value,"description":${jstr(v.description)}}"""
+    obj("type" -> JStr(v.tpe), "value" -> value, "description" -> JStr(v.description))
   }
 
   // ---------------------------------------------------- bound task vars
@@ -107,12 +105,6 @@ object TickVars {
     vars.toSeq.sortBy(_._1).map { case (name, value) =>
       name -> boundVar(value, declared.get(name))
     }
-
-  def boundVarsJson(vars: Map[String, Any],
-      declared: Map[String, String] = Map.empty): String =
-    boundVars(vars, declared).map { case (name, v) =>
-      s"${jstr(name)}:${varJson(v)}"
-    }.mkString("{", ",", "}")
 
   private def listVal(items: Seq[_]): Seq[(String, Any)] = items.map {
     case "*" => "star" -> ""
@@ -183,33 +175,7 @@ object TickVars {
       val s = graft.sources.Replay.lineFloat(d)
       if (s.contains('.') || s.contains('e') || s.contains("Inf") || s == "NaN") s
       else s + ".0"
-    case TickScript.Dur(sec) => durationLexeme(sec)
+    case TickScript.Dur(sec) => TickJson.formatDuration(math.round(sec * 1e9))
     case other => String.valueOf(other)
-  }
-
-  /** Shortest-units duration text (influxql.FormatDuration shape). */
-  private def durationLexeme(seconds: Double): String = {
-    val ns = math.round(seconds * 1e9)
-    val units = Seq("w" -> 604800000000000L, "d" -> 86400000000000L,
-      "h" -> 3600000000000L, "m" -> 60000000000L, "s" -> 1000000000L,
-      "ms" -> 1000000L, "u" -> 1000L)
-    units.collectFirst {
-      case (u, size) if ns != 0 && ns % size == 0 => s"${ns / size}$u"
-    }.getOrElse(s"${ns}u")
-  }
-
-  private def jstr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
-      case c => sb += c
-    }
-    sb += '"'
-    sb.toString
   }
 }

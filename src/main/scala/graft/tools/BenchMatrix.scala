@@ -154,13 +154,15 @@ object BenchMatrix {
       record(s"simple_T${t}_P${p}_as_jobs", t.toLong * p, secs)
     }
 
-    val json = cells.map { case (k, v) => s""""$k":${"%.1f".format(v)}""" }
-      .mkString("{", ",", "}")
+    import graft.tick.TickJson.{JFloat, JObj, JStr, obj, writeCompact}
+    val json = writeCompact(obj(
+      "metric" -> JStr("matrix_points_per_sec"),
+      "cells" -> JObj(cells.toSeq.map { case (k, v) =>
+        k -> JFloat(BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toDouble) })))
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/bench_matrix.json"),
-      s"""{"metric":"matrix_points_per_sec","cells":$json}""")
+      java.nio.file.Paths.get("bench_matrix.json"), json)
     catch { case _: Throwable => () }
-    println(s"""{"metric":"matrix_points_per_sec","cells":$json}""")
+    println(json)
     spark.stop()
   }
 }

@@ -25,11 +25,18 @@ object Explain {
     val df = graft.SparkEntry.queries(name)(spark, dir)
     val n = df.count()
     val p = df.queryExecution.executedPlan.toString
-    def c(re: String): Int = re.r.findAllMatchIn(p).length
-    println(s"== $name rows=$n sf=$dir aqe=$aqe scans=${c("FileScan parquet")} " +
-      s"explodes=${c("Generate (pos)?explode")} exchanges=${c("Exchange (hash|range)")} " +
-      s"reused=${c("ReusedExchange")} rddScans=${c("Scan ExistingRDD")}")
+    println(s"== $name rows=$n sf=$dir aqe=$aqe ${workCounts(p)} " +
+      s"rddScans=${"Scan ExistingRDD".r.findAllMatchIn(p).length}")
     println(p)
     spark.stop()
+  }
+
+  /** The duplicate-work counts of a printed physical plan, as
+    * `scans=N explodes=N exchanges=N reused=N` (Explain, ExplainAll and
+    * PlanAudit all print this). */
+  def workCounts(plan: String): String = {
+    def c(re: String): Int = re.r.findAllMatchIn(plan).length
+    s"scans=${c("FileScan parquet")} explodes=${c("Generate (pos)?explode")} " +
+      s"exchanges=${c("Exchange (hash|range)")} reused=${c("ReusedExchange")}"
   }
 }

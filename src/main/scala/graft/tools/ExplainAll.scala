@@ -26,11 +26,8 @@ object ExplainAll {
         val qe = df.queryExecution
         val formatted = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        val p = qe.executedPlan.toString
-        def c(re: String): Int = re.r.findAllMatchIn(p).length
-        val header = s"== $name sf=$dir aqe=0 scans=${c("FileScan parquet")} " +
-          s"explodes=${c("Generate (pos)?explode")} exchanges=${c("Exchange (hash|range)")} " +
-          s"reused=${c("ReusedExchange")}\n\n"
+        val header =
+          s"== $name sf=$dir aqe=0 ${Explain.workCounts(qe.executedPlan.toString)}\n\n"
         java.nio.file.Files.writeString(
           outDir.resolve(s"${name}_$suffix.txt"), header + formatted)
         println(s"== wrote $name")

@@ -44,14 +44,11 @@ object PlanAudit {
           "SinglePartitionExchange" -> plan.contains("Exchange SinglePartition"))
           .filter(_._2).map(_._1)
         if (flags.nonEmpty) println(s"== FLAG $name: ${flags.mkString(",")}")
-        def c(re: String): Int = re.r.findAllMatchIn(plan).length
         // duplicate-work telemetry (the r20 tfidf class of defect): high
         // scan counts mean the same table is re-read per branch — fine
         // when it's the documented rescan-over-cache trade, a defect when
         // a broken ReuseExchange silently doubles a corpus pass
-        println(s"== WORK $name scans=${c("FileScan parquet")} " +
-          s"explodes=${c("Generate (pos)?explode")} " +
-          s"exchanges=${c("Exchange (hash|range)")} reused=${c("ReusedExchange")}")
+        println(s"== WORK $name ${Explain.workCounts(plan)}")
       } catch { case e: Throwable => println(s"== ERR $name: ${e.getMessage.take(80)}") }
     }
     println("== audit done")

@@ -17,6 +17,16 @@ class AlertHandlersSpec extends SparkSpec {
     assert(out(0) == """{"id":"cpu:a","message":"cpu:a is \"CRITICAL\"","level":"CRITICAL","time":1000,"duration":60}""")
   }
 
+  test("webhook escapes a two-line message containing < like Go's json.Marshal") {
+    val df = Seq(("cpu:a", "value < 5\nfor 1m", "WARNING", 1000L, 60L))
+      .toDF("id", "message", "level", "time_us", "duration_us")
+    val out = df.select(AlertHandlers.webhook(
+      $"id", $"message", $"level", $"time_us", $"duration_us")).as[String].head()
+    assert(out ==
+      "{\"id\":\"cpu:a\",\"message\":\"value \\u003c 5\\nfor 1m\",\"level\":\"WARNING\"," +
+      "\"time\":1000,\"duration\":60}")
+  }
+
   test("slack payload colors by level") {
     val out = events.select(AlertHandlers.slack($"message", $"level", "#alerts")).as[String].collect()
     assert(out(0).contains("\"color\":\"danger\"") && out(0).startsWith("""{"channel":"#alerts""""))

@@ -478,6 +478,13 @@ class FluxTaskSpec extends AnyFunSuite {
     // strict per-id order, including the fires AFTER the thrown one
     assert(order.synchronized(order.filter(_._1 == 1L).map(_._2).toSeq) === (1 to 5))
     assert(order.synchronized(order.filter(_._1 == 2L).map(_._2).toSeq) === (1 to 5))
+    // two failing bodies on different ids: one throw carrying the other
+    val two = new TaskSerialPool(2)
+    two.submit(1L) { throw new RuntimeException("one") }
+    two.submit(2L) { throw new RuntimeException("two") }
+    val e2 = intercept[RuntimeException] { two.awaitAll() }
+    assert(e2.getSuppressed.length === 1)
+    assert((e2 +: e2.getSuppressed.toSeq).map(_.getMessage).toSet === Set("one", "two"))
   }
 
   test("worker pool: a drain-time failure is the run's own failure — latestSuccess does NOT advance") {

@@ -681,7 +681,7 @@ class GoldenReplaySpec extends SparkSpec {
         expr("fieldsFloat['value']").as("value"),
         arrival(expr("tags['service']")).as("aid"))
     val pairs = Pipe(base, "time", Seq("dc"), idCol = Some("aid"))
-      .combinePairs(lit(true), lit(true), 1, ("first", "second"))
+      .combineK(Seq(lit(true), lit(true)), 1, Seq("first", "second"))
       .filter(col("bucket_s") === 0)
       .withColumn("ratio", col("first_value") / col("second_value"))
     val got = pairs.select("dc", "first_service", "second_service", "ratio")

@@ -161,7 +161,7 @@ class GoldenReplaySpec2 extends SparkSpec {
         expr("fieldsFloat['value']").as("value"),
         arrival(expr("tags['service']")).as("aid"))
     val pairs = Pipe(base, "time", Seq("dc"), idCol = Some("aid"))
-      .combinePairs(col("service") === "auth", lit(true), 1, ("auth", "other"))
+      .combineK(Seq(col("service") === "auth", lit(true)), 1, Seq("auth", "other"))
       .filter(col("bucket_s") === 0)
       .withColumn("ratio", col("auth_value") / col("other_value"))
     val got = pairs.select("dc", "other_service", "ratio")
@@ -881,7 +881,7 @@ class GoldenReplaySpec2 extends SparkSpec {
         expr("tags['service']").as("service"),
         expr("CAST(fields['value'] AS DOUBLE)").as("value"))
     val out = Pipe(b, "time", Seq("dc", "service"))
-      .flattenOn("service", Seq("auth", "cart", "log"), "value", 5)
+      .flattenOnFields("service", Seq("auth", "cart", "log"), Seq("value"), 5, delimiter = "_")
       .df.orderBy("dc", "bucket_s")
       .select(col("dc"), col("bucket_s"), col("auth_value"), col("cart_value"),
         col("log_value"))
@@ -915,7 +915,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     // batcher_test.go:1784-1862: combine(TRUE,TRUE) over the era's second
     // 5s bucket (cart@15, auth@16, log@17 in arrival order)
     val pairs = combineEra(authFirst = false)
-      .combinePairs(lit(true), lit(true), 5, ("first", "second"))
+      .combineK(Seq(lit(true), lit(true)), 5, Seq("first", "second"))
       .filter(col("bucket_s") === 15)
       .withColumn("ratio", col("first_value") / col("second_value"))
     val got = pairs.select("dc", "first_service", "second_service", "ratio")
@@ -943,7 +943,7 @@ class GoldenReplaySpec2 extends SparkSpec {
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("dc").orderBy("time")))
     val pairs = Pipe(base, "time", Seq("dc"), idCol = Some("pid"))
-      .combinePairs(lit(true), lit(true), 5, ("first", "second"))
+      .combineK(Seq(lit(true), lit(true)), 5, Seq("first", "second"))
       .withColumn("ratio", col("first_value") / col("second_value"))
     val got = pairs.select("bucket_s", "dc", "first_service", "second_service", "ratio")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -965,7 +965,7 @@ class GoldenReplaySpec2 extends SparkSpec {
     // auth point in slot 0 of any combination containing it, which the id
     // ordering encodes (same device as the stream Combine_Filtered golden)
     val pairs = combineEra(authFirst = true)
-      .combinePairs(col("service") === "auth", lit(true), 5, ("auth", "other"))
+      .combineK(Seq(col("service") === "auth", lit(true)), 5, Seq("auth", "other"))
       .filter(col("bucket_s") === 15)
       .withColumn("ratio", col("auth_value") / col("other_value"))
     val got = pairs.select("dc", "other_service", "ratio")

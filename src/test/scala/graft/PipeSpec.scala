@@ -127,7 +127,7 @@ class PipeSpec extends SparkSpec {
       ("click", 1L, ts(5), 1.0), ("view", 2L, ts(7), 2.0), ("click", 3L, ts(65), 3.0))
       .toDF("kind", "id", "time", "v")
     val p = Pipe(df, dims = Seq("kind"), idCol = Some("id"))
-      .flattenOn("kind", Seq("click", "view"), "v", 60)
+      .flattenOnFields("kind", Seq("click", "view"), Seq("v"), 60, delimiter = "_")
     val out = p.df.orderBy("bucket_s")
       .select("bucket_s", "click_v", "view_v")
       .as[(Long, Option[Double], Option[Double])].collect().toSeq
@@ -139,7 +139,7 @@ class PipeSpec extends SparkSpec {
       (1L, ts(5), 95.0), (2L, ts(10), 96.0), (3L, ts(20), 97.0), (4L, ts(4000), 99.0))
       .toDF("id", "time", "v")
     val p = Pipe(df, dims = Nil, idCol = Some("id"))
-    val pairs = p.combinePairs(col("v") > 90, col("v") > 90, 3600)
+    val pairs = p.combineK(Seq(col("v") > 90, col("v") > 90), 3600, Seq("a", "b"))
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L))) // id 4 in a later bucket
   }

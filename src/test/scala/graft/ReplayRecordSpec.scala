@@ -152,6 +152,13 @@ class ReplayRecordSpec extends SparkSpec {
       .getMap[String, String](4)("s") == "p>q")
   }
 
+  test("brplDoc escapes a newline in a string field as \\n, like Go") {
+    val doc = Replay.brplDoc(Replay.RecordedBatch("m", Replay.GoZeroTimeNs,
+      points = Seq(LinePoint("", Map.empty, Map.empty, Map.empty, Map.empty,
+        Map("s" -> "two\nlines"), 0L))))
+    assert(doc.contains("\"s\":\"two\\nlines\""), doc)
+  }
+
   test("record → replay ≡ direct: a windowed aggregate on both paths") {
     val sparkS = spark
     import sparkS.implicits._

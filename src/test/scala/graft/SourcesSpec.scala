@@ -68,6 +68,20 @@ class SourcesSpec extends SparkSpec {
     assert(json.contains(""""name":"m"""") && json.contains(""""host":"a""""))
   }
 
+  test("result renderer escapes names, tag keys, columns and values like Go") {
+    val r = ResultRenderer.Result(Seq(ResultRenderer.Series(
+      "m\"x", Map("k\"ey" -> "two\nlines"), Seq("time", "v<1"), Seq(Seq("a&b")))))
+    val json = ResultRenderer.toJson(r)
+    // Go's encoding/json bytes for the same models.Result
+    assert(json ===
+      "{\"series\":[{\"name\":\"m\\\"x\",\"tags\":{\"k\\\"ey\":\"two\\nlines\"}," +
+      "\"columns\":[\"time\",\"v\\u003c1\"],\"values\":[[\"a\\u0026b\"]]}]}")
+    // and it is valid JSON that reads back to the same strings
+    import graft.tick.TickJson._
+    val JObj(Seq(("series", JArr(Seq(JObj(fs)))))) = parseJson(json)
+    assert(fs.toMap.apply("tags") === JObj(Seq("k\"ey" -> JStr("two\nlines"))))
+  }
+
   test("sideload overlays most-specific config, falls back to default") {
     val points = Seq(("x", 1L), ("y", 2L), ("z", 3L)).toDF("kind", "id")
     val config = Seq(
@@ -89,7 +103,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("global deadman: the [deadman] config section end-to-end") {
-    import Deadman.{parseConfig, goDuration, parseGoDurationSeconds, GlobalConfig}
+    import Deadman.{parseConfig, parseGoDurationSeconds, GlobalConfig}
     // the reference's own shipped config section parses to its defaults
     val conf = RefFixtures.read("etc/kapacitor/kapacitor.conf")
     val cfg = parseConfig(conf)
@@ -104,9 +118,9 @@ class SourcesSpec extends SparkSpec {
     assert(parseGoDurationSeconds("90s") === 90)
     assert(parseGoDurationSeconds("1m30s") === 90)
     assert(parseGoDurationSeconds("2h") === 7200)
-    assert(goDuration(10) === "10s")
-    assert(goDuration(90) === "1m30s")
-    assert(goDuration(3600) === "1h0m0s")
+    assert(graft.tick.Cli.goDurationNs(10 * 1000000000L) === "10s")
+    assert(graft.tick.Cli.goDurationNs(90 * 1000000000L) === "1m30s")
+    assert(graft.tick.Cli.goDurationNs(3600 * 1000000000L) === "1h0m0s")
     // the global branch renders the service id/message templates:
     // NODE_NAME/INTERVAL substituted, if-eq alive/dead, printf %0.3f
     val df = Seq(("g", 10L * 1000000), ("g", 7210L * 1000000)).toDF("k", "tus")

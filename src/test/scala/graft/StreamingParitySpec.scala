@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Batch ≡ streaming parity for the three operators whose batch forms are
   * closed-form DataFrame plans: windowAligned (aligned sliding-window agg),
-  * combinePairs (stream-stream SELF-join on the tolerance bucket), and
-  * joinMulti (two-stream tolerance join). Each case drives a REAL
+  * combineK over a pair (stream-stream SELF-join on the tolerance
+  * bucket), and joinMulti (two-stream tolerance join). Each case drives a REAL
   * Structured Streaming query (MemoryStream → watermark → append sink) and
   * compares its finalized output set against the batch operator over the
   * same rows. */
@@ -77,7 +77,7 @@ class StreamingParitySpec extends SparkSpec {
       P("B", 10 * us, 5.0, 5), P("B", 13 * us, 6.0, 6))
     val df = rows.toDF().withColumn("time", timestamp_micros($"timeUs"))
     val batch = Pipe(df, "time", Seq("group"), idCol = Some("pid"))
-      .combinePairs(lit(true), lit(true), 5, ("a", "b"))
+      .combineK(Seq(lit(true), lit(true)), 5, Seq("a", "b"))
       .select($"group", $"bucket_s", $"a_pid", $"b_pid", $"a_value", $"b_value")
       .as[(String, Long, Long, Long, Double, Double)].collect().toSet
 

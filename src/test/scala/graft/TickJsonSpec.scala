@@ -328,6 +328,27 @@ class TickJsonSpec extends AnyFunSuite {
     assert(TickJson.remarshal(TickJson.remarshal(m)) === m)
   }
 
+  test("goFloat keeps the sign of negative zero, like Go") {
+    assert(TickJson.goFloat(-0.0) === "-0")
+    assert(TickJson.goFloat(0.0) === "0")
+  }
+
+  test("Bench.queryTimes reads bench_times.json's per-query map like the old regex reader") {
+    val doc = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("bench_times.json")), "UTF-8")
+    // the regex pair Bench used before it parsed its own output as JSON
+    val qobj = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(doc).map(_.group(1)).getOrElse("")
+    val byRegex = """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(qobj)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    assert(byRegex.size > 100)
+    assert(Bench.queryTimes(doc) === byRegex)
+    // a dev-mode stdout line, as the fresh-JVM re-measure reads its child's
+    val line = """{"metric":"total","unit":"sec","sf":"sf0.1","n_queries":2,""" +
+      """"queries":{"q_a":0.5688,"q_b":2},"isolated":{},"session":{"fresh_contended":false},"value":2.5688}"""
+    assert(Bench.queryTimes(line) === Map("q_a" -> 0.5688, "q_b" -> 2.0))
+    assert(Bench.queryTimes("not json") === Map.empty)
+  }
+
   test("golden: the reference's compact unmarshal vector canonicalizes to the marshal form") {
     // TestPipeline_Unmarshal's input (alphabetical keys, compact) must
     // normalize to exactly what marshaling the equivalent TICKscript

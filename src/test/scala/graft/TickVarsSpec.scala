@@ -102,7 +102,7 @@ class TickVarsSpec extends AnyFunSuite {
       """{"x":{"type":"int","value":5,"description":"threshold value"}}""")
     val lam = "var p = lambda: \"value\" > 5.0\nstream|from()"
     assert(TickVars.varsJson(lam) ===
-      """{"p":{"type":"lambda","value":"\"value\" > 5.0","description":""}}""")
+      """{"p":{"type":"lambda","value":"\"value\" """ + "\\u003e" + """ 5.0","description":""}}""")
     val lst = "var g = ['host', *]\nstream|from()"
     assert(TickVars.varsJson(lst) ===
       """{"g":{"type":"list","value":[{"type":"string","value":"host"},{"type":"star","value":""}],"description":""}}""")
@@ -155,6 +155,13 @@ class TickVarsSpec extends AnyFunSuite {
     // round-trip is a fixed point
     val once = roundTrip("(\"a\"+1.0)*(\"b\"-2.0)")
     assert(roundTrip(once) === once)
+  }
+
+  test("a zero duration literal renders as 0s (influxql.FormatDuration)") {
+    import graft.tick.TickScript.{Dur, EBin, EField, ELit}
+    def gt(seconds: Double) = TickVars.exprString(EBin(">", EField("dt"), ELit(Dur(seconds))))
+    assert(gt(0.0) === "\"dt\" > 0s")
+    assert(gt(90.0) === "\"dt\" > 90s")
   }
 
   test("aliases of lambdas and lists stay vars (TypeOf is valid)") {
