@@ -192,10 +192,6 @@ final case class Pipe(
   def unionRename(newName: String, others: Pipe*): Pipe =
     union(others: _*).copy(measurement = Some(newName))
 
-  /** groupBy(...).exclude(tags…): current dims minus the excluded ones
-    * (reference group_by.go ExcludedDimensions). */
-  def groupByExclude(excluded: String*): Pipe = copy(dims = dims.filterNot(excluded.contains))
-
   /** trickle(): batch → stream representation change (reference
     * trickle.go:9-66). Rows are already flat here, so this only clears the
     * batch bookkeeping — kept for API parity. */

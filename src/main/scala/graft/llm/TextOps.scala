@@ -110,11 +110,6 @@ object TextOps {
     array((0 until k).map(i => array_min(transform(hashArr, h => mixHash(h, consts(i))))): _*)
   }
 
-  /** Convenience: signature straight from shingles (computes h60 inline —
-    * prefer materializing the hash array first as Dedup.minhashLsh does). */
-  def minhashSig(shingleArr: Column, k: Int): Column =
-    minhashSigFromHashes(transform(shingleArr, s => h60(s)), k)
-
   /** LSH band keys for a MinHash signature: `bands` bands of `rows` rows,
     * each hashed to a compact string key. Two documents are candidate
     * duplicates iff they collide on at least one band. */
@@ -132,17 +127,13 @@ object TextOps {
 
   // ------------------------------------------------------------- SimHash
 
-  /** 32-bit SimHash over the token multiset: bit b of the result is set
-    * when the sum over tokens of (2*bit_b(h60(token)) - 1) is positive.
-    * Token frequency weights naturally (each occurrence votes). 32 bits
-    * keeps every intermediate in Long range; near-duplicates land within a
-    * small Hamming distance. */
-  def simhash32(toks: Column): Column = simhash32FromHashes(transform(toks, t => h60(t)))
-
-  /** SimHash over a precomputed token-hash array — the hash array must be
-    * materialized in its own projection upstream, because each of the 32
-    * bit-vote aggregates references it (re-inlining would recompute the
-    * md5s 32×). */
+  /** 32-bit SimHash over a precomputed token-hash array: bit b of the
+    * result is set when the sum over tokens of (2*bit_b(hash) - 1) is
+    * positive, so each occurrence votes and near-duplicates land within a
+    * small Hamming distance. 32 bits keeps every intermediate in Long
+    * range. The hash array must be materialized in its own projection
+    * upstream, because each of the 32 bit-vote aggregates references it
+    * (re-inlining would recompute the md5s 32×). */
   def simhash32FromHashes(ths: Column): Column = {
     val bits = (0 until 32).map { b =>
       val vote = aggregate(ths, lit(0L), (acc, h) => acc + (shiftright(h, b) % 2) * 2 - 1)

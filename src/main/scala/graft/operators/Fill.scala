@@ -41,9 +41,6 @@ object Fill {
       .join(agg, Seq(groupCol, "bucket_s"), "left")
   }
 
-  def fillValue(df: DataFrame, valueCol: String, v: Column): DataFrame =
-    df.withColumn(valueCol, coalesce(col(valueCol), v))
-
   def fillPrevious(df: DataFrame, groupCol: String, bucketCol: String, valueCol: String): DataFrame = {
     val w = Window.partitionBy(col(groupCol)).orderBy(col(bucketCol))
       .rowsBetween(Window.unboundedPreceding, 0)

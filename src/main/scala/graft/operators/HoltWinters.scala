@@ -349,66 +349,6 @@ object HoltWinters {
     run(values.zipWithIndex.map { case (v, i) => TV(i.toLong, v) },
       h, m, 1L, withFit).map(_.v)
 
-  /** Distributed fit: one task row per (group, seed) so the 4^4
-    * Nelder-Mead restarts spread across the cluster instead of
-    * serializing inside a single aggregation task — the right shape when
-    * groups are few and fat (a 5-group daily-seasonal fit keeps 5 cores
-    * busy under the Aggregator; here it keeps 5 × 256). The per-group
-    * winner is the same argmin the serial path picks (first
-    * strictly-smaller SSE in seed order; NaN never pins).
-    *
-    * Shape: the prepared per-group series are small by construction (this
-    * path is for FEW groups — many groups saturate the cluster under the
-    * serial Aggregator), so they are collected once and broadcast; restart
-    * tasks are a bare `spark.range` over group × seed carrying ZERO series
-    * bytes, sliced well past the core count so the scheduler load-balances
-    * the uneven simplex runs; only (seed, sse, 13-double params) rows meet
-    * the per-group argmin reduce. The previous form shipped the full
-    * series inside every restart row through two shuffles — 3.3× slower
-    * at sf0.1 and strictly worse at any scale.
-    *
-    * Input: (group, epochSeconds, value) rows. Output: (group, t, v)
-    * forecast (or fit ++ forecast) points. */
-  def holtWintersDistributed(
-      points: org.apache.spark.sql.DataFrame,
-      groupCol: String, tCol: String, vCol: String,
-      h: Int, m: Int, intervalS: Long,
-      withFit: Boolean = false): org.apache.spark.sql.DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val mm = m; val ivl = intervalS
-    val typed = points.select(
-      org.apache.spark.sql.functions.col(groupCol).cast("string"),
-      org.apache.spark.sql.functions.col(tCol).cast("long"),
-      org.apache.spark.sql.functions.col(vCol).cast("double"))
-      .as[(String, Long, Double)]
-    // grid-prepare executor-side, collect only the gridded series; null
-    // group keys sort first (the serial Aggregator branch accepts them too)
-    val prepared: Array[(String, Prepared, Array[Double])] = typed
-      .groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        prepare(it.map(r => TV(r._2, r._3)).toArray, mm, ivl) match {
-          case Some(p) => (g, p.y, p.t0, p.tN, initialParams(p.y, mm))
-          case None    => (g, Array.empty[Double], 0L, 0L, Array.empty[Double])
-        }
-      }
-      .collect()
-      .filter(_._2.nonEmpty)
-      .sortBy(r => Option(r._1))
-      .map { case (g, y, t0, tN, p0) => (g, Prepared(y, t0, tN), p0) }
-    if (prepared.isEmpty)
-      return Seq.empty[(String, Long, Double)].toDF(groupCol, tCol, vCol)
-    val (df, bc) = fanOutFromPrepared(
-      spark, prepared, groupCol, tCol, vCol, h, m, intervalS, withFit)
-    // pull the (tiny, ≤ prepared-groups × (fit+h) rows) forecast to the
-    // DRIVER: the series broadcast can then be destroyed immediately, and
-    // unlike localCheckpoint(true) the result survives executor loss —
-    // a local relation has no executor-resident blocks to lose
-    val out = driverLocal(spark, df)
-    bc.destroy()
-    out
-  }
-
   /** Collect a small result and rebuild it as a driver-local DataFrame
     * (LocalRelation): downstream consumers no longer depend on any executor
     * state or upstream lineage. Only for results already known to be

@@ -578,7 +578,8 @@ object EventQueries4 {
     val agents = math.max(4, s.sparkContext.defaultParallelism / 4)
     graft.sources.UdfProto.pipePoints(
         in.coalesce(agents),
-        Seq("java", "-cp", cp, "graft.tools.ScaleAgent"),
+        graft.sources.UdfProto.Agent.Process(
+          Seq("java", "-cp", cp, "graft.tools.ScaleAgent")),
         options = Seq("factor" -> Seq(graft.sources.UdfProto.OptDouble(2.5))))
       .toDF()
       .select(element_at(col("tags"), "eid").cast("long").as("event_id"),
@@ -632,7 +633,8 @@ object EventQueries4 {
     val agents = math.max(4, s.sparkContext.defaultParallelism / 4)
     graft.sources.UdfProto.pipeBatches(
         batches.coalesce(agents),
-        Seq("java", "-cp", cp, "graft.tools.BatchStatsAgent"),
+        graft.sources.UdfProto.Agent.Process(
+          Seq("java", "-cp", cp, "graft.tools.BatchStatsAgent")),
         options = Seq("field" -> Seq(graft.sources.UdfProto.OptString("value"))))
       .flatMap(b => b.points.map(p => (
         p.tags("eid").toLong, p.fieldsDouble("value"),

@@ -42,8 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object ProcessUdf {
 
-  private val MaxStderrBytes = 64 * 1024
-
   /** Pipe each partition's lines through `cmd` (argv, not shell-parsed).
     * Lazily streams: stdout lines are emitted as produced; the child's exit
     * status is checked when its stdout closes, failing the task with the
@@ -57,42 +55,17 @@ object ProcessUdf {
   }
 
   /** One child process for one partition's input iterator. Visible for the
-    * driver-side spec; normally invoked inside mapPartitions. */
+    * driver-side spec; normally invoked inside mapPartitions. The child's
+    * lifecycle — spawn, bounded stderr drain, task-context helper threads,
+    * kill on task end, exit-code wait — is [[UdfProto]]'s process
+    * transport; only the line framing is this bridge's own. */
   def runPartition(cmd: Seq[String], input: Iterator[String]): Iterator[String] = {
     if (!input.hasNext) return Iterator.empty
-    val pb = new ProcessBuilder(cmd: _*)
-    val proc = pb.start()
-    // Captured on the task thread so the helper threads below can adopt it.
-    // The writer thread drains the UPSTREAM iterator — any operator in that
-    // chain may call TaskContext.get() lazily during consumption (shuffle
-    // readers, memory-acquiring operators, user mapPartitions code) and
-    // would NPE or misattribute task memory on a bare thread. Spark's own
-    // PipedRDD sets the context in its stdin-writer thread for this reason.
-    val taskCtx = TaskContext.get()
-    // Kill the child if the task dies first (cancellation, upstream error);
-    // without this a failed stage leaks processes on every executor.
-    Option(taskCtx).foreach(_.addTaskCompletionListener[Unit] { _ =>
-      if (proc.isAlive) proc.destroyForcibly()
-      ()
-    })
-    val stderr = new java.io.ByteArrayOutputStream()
-    val errThread = new Thread(() => {
-      if (taskCtx != null) org.apache.spark.GraftTaskContextBridge.set(taskCtx)
-      val es = proc.getErrorStream
-      val buf = new Array[Byte](8192)
-      var n = es.read(buf)
-      while (n >= 0) {
-        if (stderr.size < MaxStderrBytes) stderr.write(buf, 0, n)
-        n = es.read(buf)
-      }
-    }, "graft-udf-stderr")
-    errThread.setDaemon(true)
-    errThread.start()
+    val child = new UdfProto.ProcessTransport(cmd, TaskContext.get())
     @volatile var writeError: Throwable = null
-    val writer = new Thread(() => {
-      if (taskCtx != null) org.apache.spark.GraftTaskContextBridge.set(taskCtx)
+    val writer = child.startThread("graft-udf-stdin") {
       val w = new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(proc.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
+        new java.io.OutputStreamWriter(child.out, java.nio.charset.StandardCharsets.UTF_8))
       try {
         input.foreach { l => w.write(l); w.write('\n') }
       } catch {
@@ -103,26 +76,21 @@ object ProcessUdf {
       } finally {
         try w.close() catch { case _: java.io.IOException => () }
       }
-    }, "graft-udf-stdin")
-    writer.setDaemon(true)
-    writer.start()
+    }
     val reader = new java.io.BufferedReader(
-      new java.io.InputStreamReader(proc.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
+      new java.io.InputStreamReader(child.in, java.nio.charset.StandardCharsets.UTF_8))
     new Iterator[String] {
       private var nextLine: String = reader.readLine()
       private var finished = false
       private def finish(): Unit = if (!finished) {
         finished = true
         writer.join()
-        errThread.join(2000)
-        val code = proc.waitFor()
+        val (code, err) = child.waitDone()
         if (writeError != null) throw writeError
-        if (code != 0) {
-          val err = stderr.toString("UTF-8").trim
+        if (code != 0)
           throw new RuntimeException(
-            s"ProcessUdf child '${cmd.mkString(" ")}' exited $code" +
+            s"ProcessUdf child '${child.describe}' exited $code" +
               (if (err.nonEmpty) s": $err" else ""))
-        }
       }
       override def hasNext: Boolean = {
         if (nextLine != null) true

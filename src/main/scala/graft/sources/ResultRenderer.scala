@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.tick.TickJson.escapeGo
+import graft.tick.TickJson.{JArr, JBool, JFloat, JInt, JNull, JStr, JV, obj, sortedObj, writeCompact}
 
 /** The reference's output contract: `models.Result{Series: []Row}` with
   * per-(name,tags) series, `time` first column (models/result.go:9-43) —
@@ -35,25 +35,31 @@ object ResultRenderer {
     Result(series)
   }
 
-  private def jsonValue(v: Any): String = v match {
-    case null => "null"
-    case s: String => escapeGo(s)
-    case t: java.sql.Timestamp => "\"" + t.toInstant.toString + "\""
-    case b: Boolean => b.toString
-    case n => n.toString
+  /** One cell as Go's encoding/json renders the reference's `[]interface{}`
+    * row values: float64 through [[graft.tick.TickJson.goFloat]] (`85`,
+    * `1e-7`), integers bare, times as RFC3339Nano (`…:01.5Z`). */
+  private def jsonValue(v: Any): JV = v match {
+    case null => JNull
+    case s: String => JStr(s)
+    case t: java.sql.Timestamp =>
+      val i = t.toInstant
+      JStr(Replay.rfc3339Nano(i.getEpochSecond * 1000000000L + i.getNano))
+    case b: Boolean => JBool(b)
+    case l: Long => JInt(l)
+    case i: Int => JInt(i.toLong)
+    case n: Number => JFloat(n.doubleValue)
+    case other => JStr(other.toString)
   }
 
   /** The httpOut()-equivalent JSON rendering of a Result. */
-  def toJson(r: Result): String = {
-    val series = r.series.map { s =>
-      val tags = s.tags.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${escapeGo(k)}:${jsonValue(v)}" }.mkString("{", ",", "}")
-      val cols = s.columns.map(escapeGo).mkString("[", ",", "]")
-      val vals = s.values.map(_.map(jsonValue).mkString("[", ",", "]")).mkString("[", ",", "]")
-      s"""{"name":${escapeGo(s.name)},"tags":$tags,"columns":$cols,"values":$vals}"""
-    }.mkString("[", ",", "]")
-    s"""{"series":$series}"""
-  }
+  def toJson(r: Result): String =
+    writeCompact(obj("series" -> JArr(r.series.map { s =>
+      obj(
+        "name" -> JStr(s.name),
+        "tags" -> sortedObj(s.tags.toSeq.map { case (k, v) => k -> jsonValue(v) }),
+        "columns" -> JArr(s.columns.map(JStr)),
+        "values" -> JArr(s.values.map(row => JArr(row.map(jsonValue)))))
+    })))
 
   def httpOutJson(df: DataFrame, name: String, tagCols: Seq[String]): String =
     toJson(render(df, name, tagCols))

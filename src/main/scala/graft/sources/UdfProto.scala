@@ -32,15 +32,16 @@ import org.apache.spark.sql.Dataset
   * and BATCH-edge agents (BeginBatch/Point/EndBatch framing, the
   * reference `Server.writeBufferedBatch`, udf/server.go:445-519 +
   * 625-633) via [[runBatchAgentPartition]]/[[pipeBatches]] (BATCH→BATCH)
-  * and [[runBatchToPointsPartition]] (BATCH→STREAM). Both config
-  * attachments are driven too (services/udf/config.go:20-47): child
-  * processes, or long-running unix-socket agent servers via the
-  * `*Socket*` variants — one fresh connection per partition, each an
-  * independent protocol session. The InfoResponse edge types are
-  * validated against the runner in use, like the reference refuses a
-  * task whose edge types mismatch the agent's; when the agent DECLARES
-  * option signatures (InfoResponse.options), Init options validate with
-  * the reference's define-time errors (pipeline/udf.go:128-160).
+  * and [[runBatchToPointsPartition]]/[[pipeBatchesToPoints]]
+  * (BATCH→STREAM). Each takes an [[Agent]], one of the two config
+  * attachments (services/udf/config.go:20-47): a child process, or a
+  * long-running unix-socket agent server — one fresh connection per
+  * partition, each an independent protocol session. The InfoResponse
+  * edge types are validated against the runner in use, like the
+  * reference refuses a task whose edge types mismatch the agent's; when
+  * the agent DECLARES option signatures (InfoResponse.options), Init
+  * options validate with the reference's define-time errors
+  * (pipeline/udf.go:128-160).
   *
   * The keepalive probe (udf/server.go:361-441) is driven when
   * `keepaliveMs > 0` — see [[runAgentPartition]]. The Snapshot/Restore
@@ -783,14 +784,45 @@ object UdfProto {
   private val MaxStderrBytes = 64 * 1024
   private val ResponseQueueCapacity = 1024
 
-  /** The two agent attachments of the reference config
-    * (services/udf/config.go:20-47): a CHILD PROCESS (`prog`/`args`,
-    * one per partition) or a long-running UNIX-DOMAIN SOCKET server
-    * (`socket = "/path"`, kapacitor's UDFSocket/NewSocketConn,
-    * udf.go:280-357 — each connection is an independent protocol
-    * session). The AgentChild lifecycle is transport-agnostic, exactly
-    * like the reference's udf.Server over io.Reader/WriteCloser. */
-  private trait AgentTransport {
+  /** Where an agent runs: the two attachments one reference
+    * `[udf.functions.x]` config entry chooses between
+    * (services/udf/config.go:20-47). Every runner and Spark entry point
+    * takes one, so either attachment drives every edge shape.
+    * Serializable: the `mapPartitions` closure carries it to the
+    * executors, where each partition opens its own [[AgentTransport]]. */
+  sealed trait Agent extends Serializable {
+    private[sources] def open(taskCtx: TaskContext): AgentTransport
+  }
+
+  object Agent {
+    /** A child process per partition (`prog`/`args`): argv, not
+      * shell-parsed. */
+    final case class Process(cmd: Seq[String]) extends Agent {
+      require(cmd.nonEmpty, "UdfProto: empty command")
+      private[sources] def open(taskCtx: TaskContext): AgentTransport =
+        new ProcessTransport(cmd, taskCtx)
+    }
+
+    /** A long-running unix-domain socket server (`socket = "/path"`,
+      * kapacitor's UDFSocket/NewSocketConn, udf.go:280-357): no child is
+      * spawned, each partition dials one fresh connection — an
+      * independent protocol session. The server must be reachable at
+      * `path` on every executor host (on a real cluster that means a
+      * node-local daemon, the same deployment contract the reference's
+      * socket UDFs have). */
+    final case class Socket(path: String) extends Agent {
+      require(path.nonEmpty, "UdfProto: empty socket path")
+      private[sources] def open(taskCtx: TaskContext): AgentTransport =
+        new SocketTransport(path, taskCtx)
+    }
+  }
+
+  /** One open agent attachment serving one task. The AgentChild
+    * lifecycle is transport-agnostic, exactly like the reference's
+    * udf.Server over io.Reader/WriteCloser; the task-side plumbing here
+    * (completion kill, context-adopting helper threads) is shared with
+    * the line-protocol bridge, [[ProcessUdf]]. */
+  private[sources] abstract class AgentTransport(taskCtx: TaskContext) {
     def in: InputStream
     def out: OutputStream
     def alive: Boolean
@@ -799,14 +831,46 @@ object UdfProto {
       * (0, "") for sockets, which have neither. */
     def waitDone(): (Int, String)
     def describe: String
+
+    /** Set at task completion: unblocks helper loops so a killed task
+      * cannot leak a parked thread in a long-lived executor JVM. */
+    @volatile var taskClosed = false
+
+    /** Destroy the agent if the task ends first (cancellation, upstream
+      * error); without this a failed stage leaks processes on every
+      * executor. Each transport calls it once `destroy` has something to
+      * destroy. */
+    protected final def destroyWithTask(): Unit =
+      Option(taskCtx).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        taskClosed = true
+        destroy()
+      })
+
+    /** Start a daemon helper thread that adopts the task's context. The
+      * stdin writer drains the UPSTREAM iterator — any operator in that
+      * chain may call TaskContext.get() lazily during consumption
+      * (shuffle readers, memory-acquiring operators, user mapPartitions
+      * code) and would NPE or misattribute task memory on a bare thread.
+      * Spark's own PipedRDD sets the context in its stdin-writer thread
+      * for this reason. */
+    def startThread(name: String)(body: => Unit): Thread = {
+      val t = new Thread(() => {
+        if (taskCtx != null) org.apache.spark.GraftTaskContextBridge.set(taskCtx)
+        body
+      }, name)
+      t.setDaemon(true)
+      t.start()
+      t
+    }
   }
 
-  private final class ProcessTransport(cmd: Seq[String], taskCtx: TaskContext)
-      extends AgentTransport {
+  /** A spawned child: stdin/stdout are the streams, stderr drains
+    * concurrently into a bounded buffer surfaced by `waitDone`. */
+  private[sources] final class ProcessTransport(cmd: Seq[String], taskCtx: TaskContext)
+      extends AgentTransport(taskCtx) {
     private val proc = new ProcessBuilder(cmd: _*).start()
     private val stderrBuf = new java.io.ByteArrayOutputStream()
-    private val errThread = new Thread(() => {
-      if (taskCtx != null) org.apache.spark.GraftTaskContextBridge.set(taskCtx)
+    private val errThread = startThread("graft-udf-stderr") {
       val es = proc.getErrorStream
       val buf = new Array[Byte](8192)
       var n = es.read(buf)
@@ -814,9 +878,7 @@ object UdfProto {
         if (stderrBuf.size < MaxStderrBytes) stderrBuf.write(buf, 0, n)
         n = es.read(buf)
       }
-    }, "graft-udfproto-stderr")
-    errThread.setDaemon(true)
-    errThread.start()
+    }
     val in = new BufferedInputStream(proc.getInputStream)
     val out = new BufferedOutputStream(proc.getOutputStream)
     def alive: Boolean = proc.isAlive
@@ -827,9 +889,11 @@ object UdfProto {
       (code, stderrBuf.toString("UTF-8").trim)
     }
     def describe: String = cmd.mkString(" ")
+    destroyWithTask()
   }
 
-  private final class SocketTransport(path: String) extends AgentTransport {
+  private final class SocketTransport(path: String, taskCtx: TaskContext)
+      extends AgentTransport(taskCtx) {
     private val ch = java.nio.channels.SocketChannel.open(
       java.net.UnixDomainSocketAddress.of(path))
     @volatile private var closed = false
@@ -865,11 +929,12 @@ object UdfProto {
     }
     def waitDone(): (Int, String) = { destroy(); (0, "") }
     def describe: String = s"unix:$path"
+    destroyWithTask()
   }
 
-  /** One agent child process with its full lifecycle: stderr drain,
-    * dedicated RESPONSE READER thread, keepalive prober, handshake, and
-    * failure plumbing.
+  /** One agent session with its full lifecycle: dedicated RESPONSE
+    * READER thread, keepalive prober, handshake, and failure plumbing
+    * over whichever transport the [[Agent]] opens.
     *
     * The reader thread mirrors the reference server's readData goroutine
     * (udf/server.go:645-663): it drains stdout continuously into a
@@ -884,18 +949,8 @@ object UdfProto {
     * when the consumer is slow the reader parks in `offer` with
     * `readerIdle = false`, which the prober treats as alive — staleness
     * only counts while the reader is actually WAITING on the agent. */
-  private final class AgentChild(mkTransport: TaskContext => AgentTransport, keepaliveMs: Long) {
-    private val taskCtx = TaskContext.get()
-    private val transport = mkTransport(taskCtx)
-    /** Set at task completion: unblocks reader `offer` loops so a killed
-      * task cannot leak a parked thread in a long-lived executor JVM. */
-    @volatile private var taskClosed = false
-    Option(taskCtx).foreach(_.addTaskCompletionListener[Unit] { _ =>
-      taskClosed = true
-      transport.destroy()
-      ()
-    })
-
+  private final class AgentChild(agent: Agent, keepaliveMs: Long) {
+    private val transport = agent.open(TaskContext.get())
     private val out = transport.out
     private val in = transport.in
     // frames from the writer thread and the keepalive prober interleave
@@ -922,11 +977,10 @@ object UdfProto {
     private val queue =
       new java.util.concurrent.LinkedBlockingQueue[AgentResponse](ResponseQueueCapacity)
 
-    private val reader = new Thread(() => {
-      if (taskCtx != null) org.apache.spark.GraftTaskContextBridge.set(taskCtx)
+    private val reader = transport.startThread("graft-udfproto-reader") {
       try {
         var done = false
-        while (!done && !taskClosed) {
+        while (!done && !transport.taskClosed) {
           readFrameBytes(in) match {
             case None => done = true
             case Some(buf) =>
@@ -936,7 +990,7 @@ object UdfProto {
                 case resp =>
                   readerIdle = false
                   var put = false
-                  while (!put && !taskClosed)
+                  while (!put && !transport.taskClosed)
                     put = queue.offer(resp, 100, TimeUnit.MILLISECONDS)
                   readerIdle = true
               }
@@ -948,41 +1002,35 @@ object UdfProto {
         readerIdle = false
         if (terminal == null) terminal = Eof
       }
-    }, "graft-udfproto-reader")
-    reader.setDaemon(true)
-    reader.start()
+    }
 
     // the prober starts BEFORE the handshake, like the reference's
     // keepalive goroutine starting at Open (udf/server.go:146-182) — an
     // agent that hangs on InfoRequest must die by timeout too. The
     // reference's own caveat applies: an agent busy inside one point
     // longer than the timeout is indistinguishable from a hung one.
-    if (keepaliveMs > 0) {
-      val prober = new Thread(() => {
-        val periodMs = math.max(1L, keepaliveMs / 2)
-        try {
-          while (transport.alive && !keepaliveTimedOut && !taskClosed) {
-            Thread.sleep(periodMs)
-            val staleMs = (System.nanoTime() - lastResponseNs) / 1000000L
-            if (readerIdle && staleMs > keepaliveMs) {
-              keepaliveTimedOut = true
-              // no lock needed: destroy unblocks any write stalled on the
-              // dead pipe, which is exactly the stall being detected
-              transport.destroy() // reader sees EOF → finish() fails with the ka note
-            } else if (transport.alive &&
-                writeLock.tryLock(periodMs, TimeUnit.MILLISECONDS)) {
-              try writeFramed(out, encodeKeepaliveRequest(System.nanoTime()))
-              catch { case _: java.io.IOException => () } // racing child exit
-              finally {
-                try out.flush() catch { case _: java.io.IOException => () }
-                writeLock.unlock()
-              }
+    if (keepaliveMs > 0) transport.startThread("graft-udfproto-keepalive") {
+      val periodMs = math.max(1L, keepaliveMs / 2)
+      try {
+        while (transport.alive && !keepaliveTimedOut && !transport.taskClosed) {
+          Thread.sleep(periodMs)
+          val staleMs = (System.nanoTime() - lastResponseNs) / 1000000L
+          if (readerIdle && staleMs > keepaliveMs) {
+            keepaliveTimedOut = true
+            // no lock needed: destroy unblocks any write stalled on the
+            // dead pipe, which is exactly the stall being detected
+            transport.destroy() // reader sees EOF → finish() fails with the ka note
+          } else if (transport.alive &&
+              writeLock.tryLock(periodMs, TimeUnit.MILLISECONDS)) {
+            try writeFramed(out, encodeKeepaliveRequest(System.nanoTime()))
+            catch { case _: java.io.IOException => () } // racing child exit
+            finally {
+              try out.flush() catch { case _: java.io.IOException => () }
+              writeLock.unlock()
             }
           }
-        } catch { case _: InterruptedException => () }
-      }, "graft-udfproto-keepalive")
-      prober.setDaemon(true)
-      prober.start()
+        }
+      } catch { case _: InterruptedException => () }
     }
 
     def fail(msg: String): Nothing = {
@@ -1068,9 +1116,8 @@ object UdfProto {
 
     /** Feed the agent's stdin from a dedicated thread; optionally request
       * a snapshot after the last data frame, then close stdin. */
-    def startWriter(body: (Array[Byte] => Unit) => Unit, snapshotAtEnd: Boolean): Thread = {
-      val writer = new Thread(() => {
-        if (taskCtx != null) org.apache.spark.GraftTaskContextBridge.set(taskCtx)
+    def startWriter(body: (Array[Byte] => Unit) => Unit, snapshotAtEnd: Boolean): Thread =
+      transport.startThread("graft-udfproto-stdin") {
         try {
           body(sendFramed)
           if (snapshotAtEnd) sendFramed(encodeSnapshotRequest())
@@ -1085,11 +1132,7 @@ object UdfProto {
           catch { case _: java.io.IOException => () }
           finally writeLock.unlock()
         }
-      }, "graft-udfproto-stdin")
-      writer.setDaemon(true)
-      writer.start()
-      writer
-    }
+      }
 
     /** End-of-stream teardown: join threads, surface writer errors, exit
       * codes, and keepalive kills. */
@@ -1108,23 +1151,17 @@ object UdfProto {
     }
   }
 
-  private def processChild(cmd: Seq[String], keepaliveMs: Long): AgentChild =
-    new AgentChild(ctx => new ProcessTransport(cmd, ctx), keepaliveMs)
-
-  private def socketChild(path: String, keepaliveMs: Long): AgentChild =
-    new AgentChild(_ => new SocketTransport(path), keepaliveMs)
-
-  /** One STREAM-edge agent process for one partition: handshake (Info,
-    * Init, optional Restore), stream Points on stdin from a writer
-    * thread, iterate Response points lazily off the reader queue. Same
-    * lifecycle guards as ProcessUdf.runPartition: TaskContext propagated
-    * into helper threads, completion-listener kill, bounded stderr
-    * surfaced on non-zero exit.
+  /** One STREAM-edge agent session for one partition: handshake (Info,
+    * Init, optional Restore), stream Points from a writer thread,
+    * iterate Response points lazily off the reader queue. Same lifecycle
+    * guards as ProcessUdf.runPartition: TaskContext propagated into
+    * helper threads, completion-listener kill, bounded stderr surfaced
+    * on non-zero exit.
     *
     * `keepaliveMs > 0` drives the reference server's liveness probe
     * (udf/server.go:361-441): a KeepaliveRequest goes out every
     * `keepaliveMs / 2`, ANY response (read the moment it arrives, on the
-    * dedicated reader thread) resets the timer, and a child that answers
+    * dedicated reader thread) resets the timer, and an agent that answers
     * nothing for `keepaliveMs` while the reader is waiting on it is
     * killed with a named keepalive-timeout failure.
     *
@@ -1134,44 +1171,16 @@ object UdfProto {
     * into a fresh agent right after Init — the reference's
     * Snapshot/Restore RPC pair (udf/server.go:289-315). */
   def runAgentPartition(
-      cmd: Seq[String],
+      agent: Agent,
       options: Seq[(String, Seq[OptVal])],
       taskId: String,
       nodeId: String,
       input: Iterator[ProtoPoint],
       keepaliveMs: Long = 0L,
       restoreSnapshot: Option[Array[Byte]] = None,
-      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoPoint] =
-    runStreamPartition(() => processChild(cmd, keepaliveMs),
-      options, taskId, nodeId, input, restoreSnapshot, onSnapshot)
-
-  /** [[runAgentPartition]] against a long-running unix-socket agent
-    * server (the reference's `socket = "/path"` config,
-    * udf.go:280-357): each partition dials one fresh connection — an
-    * independent protocol session, exactly how the reference treats
-    * socket connections. */
-  def runSocketAgentPartition(
-      socketPath: String,
-      options: Seq[(String, Seq[OptVal])],
-      taskId: String,
-      nodeId: String,
-      input: Iterator[ProtoPoint],
-      keepaliveMs: Long = 0L,
-      restoreSnapshot: Option[Array[Byte]] = None,
-      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoPoint] =
-    runStreamPartition(() => socketChild(socketPath, keepaliveMs),
-      options, taskId, nodeId, input, restoreSnapshot, onSnapshot)
-
-  private def runStreamPartition(
-      mkChild: () => AgentChild,
-      options: Seq[(String, Seq[OptVal])],
-      taskId: String,
-      nodeId: String,
-      input: Iterator[ProtoPoint],
-      restoreSnapshot: Option[Array[Byte]],
-      onSnapshot: Array[Byte] => Unit): Iterator[ProtoPoint] = {
+      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoPoint] = {
     if (!input.hasNext) return Iterator.empty
-    val child = mkChild()
+    val child = new AgentChild(agent, keepaliveMs)
     child.handshake(options, taskId, nodeId, EdgeStream, EdgeStream, restoreSnapshot)
     val writer = child.startWriter(
       send => input.foreach(p => send(encodeRequestPoint(p))),
@@ -1181,7 +1190,7 @@ object UdfProto {
         "use runBatchAgentPartition for batch edges")
   }
 
-  /** Shared STREAM-output half of [[runStreamPartition]] and
+  /** Shared STREAM-output half of [[runAgentPartition]] and
     * [[runBatchToPointsPartition]]: drain point responses from a child
     * whose PROVIDES edge is STREAM, whatever the writer feeds it.
     * `batchFramingError` names the right runner when the agent turns
@@ -1243,7 +1252,7 @@ object UdfProto {
     send(encodeRequestEnd(ProtoEndBatch(b.name, b.group, b.tmax, b.tags, byName = false)))
   }
 
-  /** One BATCH→BATCH agent process for one partition (the reference's
+  /** One BATCH→BATCH agent session for one partition (the reference's
     * outliers-example shape): each input ProtoBatch streams as
     * BeginBatch, Points, EndBatch frames, and the agent's response
     * frames reassemble into output ProtoBatches exactly like the
@@ -1252,40 +1261,16 @@ object UdfProto {
     * emits the buffered batch built from End.name/group/tags/tmax +
     * Begin.byName. */
   def runBatchAgentPartition(
-      cmd: Seq[String],
+      agent: Agent,
       options: Seq[(String, Seq[OptVal])],
       taskId: String,
       nodeId: String,
       input: Iterator[ProtoBatch],
       keepaliveMs: Long = 0L,
       restoreSnapshot: Option[Array[Byte]] = None,
-      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoBatch] =
-    runBatchPartition(() => processChild(cmd, keepaliveMs),
-      options, taskId, nodeId, input, restoreSnapshot, onSnapshot)
-
-  /** [[runBatchAgentPartition]] against a unix-socket agent server. */
-  def runSocketBatchAgentPartition(
-      socketPath: String,
-      options: Seq[(String, Seq[OptVal])],
-      taskId: String,
-      nodeId: String,
-      input: Iterator[ProtoBatch],
-      keepaliveMs: Long = 0L,
-      restoreSnapshot: Option[Array[Byte]] = None,
-      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoBatch] =
-    runBatchPartition(() => socketChild(socketPath, keepaliveMs),
-      options, taskId, nodeId, input, restoreSnapshot, onSnapshot)
-
-  private def runBatchPartition(
-      mkChild: () => AgentChild,
-      options: Seq[(String, Seq[OptVal])],
-      taskId: String,
-      nodeId: String,
-      input: Iterator[ProtoBatch],
-      restoreSnapshot: Option[Array[Byte]],
-      onSnapshot: Array[Byte] => Unit): Iterator[ProtoBatch] = {
+      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoBatch] = {
     if (!input.hasNext) return Iterator.empty
-    val child = mkChild()
+    val child = new AgentChild(agent, keepaliveMs)
     child.handshake(options, taskId, nodeId, EdgeBatch, EdgeBatch, restoreSnapshot)
     val writer = child.startWriter(
       send => input.foreach(b => sendBatch(send, b)),
@@ -1341,43 +1326,19 @@ object UdfProto {
     }
   }
 
-  /** One BATCH→STREAM agent process for one partition (the reference's
+  /** One BATCH→STREAM agent session for one partition (the reference's
     * moving_avg-example shape): batches in, plain points out. */
   def runBatchToPointsPartition(
-      cmd: Seq[String],
+      agent: Agent,
       options: Seq[(String, Seq[OptVal])],
       taskId: String,
       nodeId: String,
       input: Iterator[ProtoBatch],
       keepaliveMs: Long = 0L,
       restoreSnapshot: Option[Array[Byte]] = None,
-      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoPoint] =
-    batchToPointsPartition(() => processChild(cmd, keepaliveMs),
-      options, taskId, nodeId, input, restoreSnapshot, onSnapshot)
-
-  /** [[runBatchToPointsPartition]] against a unix-socket agent server. */
-  def runSocketBatchToPointsPartition(
-      socketPath: String,
-      options: Seq[(String, Seq[OptVal])],
-      taskId: String,
-      nodeId: String,
-      input: Iterator[ProtoBatch],
-      keepaliveMs: Long = 0L,
-      restoreSnapshot: Option[Array[Byte]] = None,
-      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoPoint] =
-    batchToPointsPartition(() => socketChild(socketPath, keepaliveMs),
-      options, taskId, nodeId, input, restoreSnapshot, onSnapshot)
-
-  private def batchToPointsPartition(
-      mkChild: () => AgentChild,
-      options: Seq[(String, Seq[OptVal])],
-      taskId: String,
-      nodeId: String,
-      input: Iterator[ProtoBatch],
-      restoreSnapshot: Option[Array[Byte]],
-      onSnapshot: Array[Byte] => Unit): Iterator[ProtoPoint] = {
+      onSnapshot: Array[Byte] => Unit = null): Iterator[ProtoPoint] = {
     if (!input.hasNext) return Iterator.empty
-    val child = mkChild()
+    val child = new AgentChild(agent, keepaliveMs)
     child.handshake(options, taskId, nodeId, EdgeBatch, EdgeStream, restoreSnapshot)
     val writer = child.startWriter(
       send => input.foreach(b => sendBatch(send, b)),
@@ -1388,91 +1349,54 @@ object UdfProto {
 
   // ------------------------------------------------------ Spark surface
 
-  /** Pipe a typed point stream through a protobuf agent, one child per
-    * partition (batch or per-micro-batch under Structured Streaming —
+  /** Pipe a typed point stream through a protobuf agent, one session
+    * per partition (batch or per-micro-batch under Structured Streaming —
     * identical contract to ProcessUdf.pipeLines). */
   def pipePoints(
       points: Dataset[ProtoPoint],
-      cmd: Seq[String],
+      agent: Agent,
       options: Seq[(String, Seq[OptVal])] = Nil,
       taskId: String = "graft",
       nodeId: String = "udf",
       keepaliveMs: Long = 0L): Dataset[ProtoPoint] = {
     val spark = points.sparkSession
     import spark.implicits._
-    require(cmd.nonEmpty, "UdfProto: empty command")
-    val (argv, opts, tid, nid, ka) = (cmd, options, taskId, nodeId, keepaliveMs)
-    points.mapPartitions(it => runAgentPartition(argv, opts, tid, nid, it, ka))
-  }
-
-  /** [[pipePoints]] against a long-running unix-socket agent server (the
-    * reference's `[udf.functions.x] socket = "/path"` attachment): no
-    * child is spawned — each partition dials one connection to the
-    * server, which must be reachable at `socketPath` on every executor
-    * host (on a real cluster that means a node-local daemon, the same
-    * deployment contract the reference's socket UDFs have). */
-  def pipePointsSocket(
-      points: Dataset[ProtoPoint],
-      socketPath: String,
-      options: Seq[(String, Seq[OptVal])] = Nil,
-      taskId: String = "graft",
-      nodeId: String = "udf",
-      keepaliveMs: Long = 0L): Dataset[ProtoPoint] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    require(socketPath.nonEmpty, "UdfProto: empty socket path")
-    val (path, opts, tid, nid, ka) = (socketPath, options, taskId, nodeId, keepaliveMs)
-    points.mapPartitions(it => runSocketAgentPartition(path, opts, tid, nid, it, ka))
-  }
-
-  /** [[pipeBatches]] against a unix-socket agent server. */
-  def pipeBatchesSocket(
-      batches: Dataset[ProtoBatch],
-      socketPath: String,
-      options: Seq[(String, Seq[OptVal])] = Nil,
-      taskId: String = "graft",
-      nodeId: String = "udf",
-      keepaliveMs: Long = 0L): Dataset[ProtoBatch] = {
-    val spark = batches.sparkSession
-    import spark.implicits._
-    require(socketPath.nonEmpty, "UdfProto: empty socket path")
-    val (path, opts, tid, nid, ka) = (socketPath, options, taskId, nodeId, keepaliveMs)
-    batches.mapPartitions(it => runSocketBatchAgentPartition(path, opts, tid, nid, it, ka))
+    points.mapPartitions(it =>
+      runAgentPartition(agent, options, taskId, nodeId, it, keepaliveMs))
   }
 
   /** Pipe buffered batches through a BATCH→BATCH protobuf agent, one
-    * child per partition. Batches are the unit of work — the Spark-side
-    * analog of a windowed/grouped batch edge; a partition carries many
-    * batches, each framed BeginBatch, Points, EndBatch on the wire. */
+    * session per partition. Batches are the unit of work — the
+    * Spark-side analog of a windowed/grouped batch edge; a partition
+    * carries many batches, each framed BeginBatch, Points, EndBatch on
+    * the wire. */
   def pipeBatches(
       batches: Dataset[ProtoBatch],
-      cmd: Seq[String],
+      agent: Agent,
       options: Seq[(String, Seq[OptVal])] = Nil,
       taskId: String = "graft",
       nodeId: String = "udf",
       keepaliveMs: Long = 0L): Dataset[ProtoBatch] = {
     val spark = batches.sparkSession
     import spark.implicits._
-    require(cmd.nonEmpty, "UdfProto: empty command")
-    val (argv, opts, tid, nid, ka) = (cmd, options, taskId, nodeId, keepaliveMs)
-    batches.mapPartitions(it => runBatchAgentPartition(argv, opts, tid, nid, it, ka))
+    batches.mapPartitions(it =>
+      runBatchAgentPartition(agent, options, taskId, nodeId, it, keepaliveMs))
   }
 
   /** Pipe buffered batches through a BATCH→STREAM protobuf agent, one
-    * child per partition: each input batch may emit any number of plain
-    * points (e.g. one aggregate point per batch). */
+    * session per partition: each input batch may emit any number of
+    * plain points (e.g. one aggregate point per batch). */
   def pipeBatchesToPoints(
       batches: Dataset[ProtoBatch],
-      cmd: Seq[String],
+      agent: Agent,
       options: Seq[(String, Seq[OptVal])] = Nil,
       taskId: String = "graft",
       nodeId: String = "udf",
       keepaliveMs: Long = 0L): Dataset[ProtoPoint] = {
     val spark = batches.sparkSession
     import spark.implicits._
-    require(cmd.nonEmpty, "UdfProto: empty command")
-    val (argv, opts, tid, nid, ka) = (cmd, options, taskId, nodeId, keepaliveMs)
-    batches.mapPartitions(it => runBatchToPointsPartition(argv, opts, tid, nid, it, ka))
+    batches.mapPartitions(it =>
+      runBatchToPointsPartition(agent, options, taskId, nodeId, it, keepaliveMs))
   }
 
   /** The line-protocol bridge: run canonical parsed points
@@ -1481,7 +1405,7 @@ object UdfProto {
     * data stays in the library's canonical wire model. */
   def pipeLinePoints(
       points: Dataset[LineProtocol.LinePoint],
-      cmd: Seq[String],
+      agent: Agent,
       options: Seq[(String, Seq[OptVal])] = Nil,
       database: String = "",
       retentionPolicy: String = "",
@@ -1490,14 +1414,13 @@ object UdfProto {
       keepaliveMs: Long = 0L): Dataset[LineProtocol.LinePoint] = {
     val spark = points.sparkSession
     import spark.implicits._
-    val (db, rp) = (database, retentionPolicy)
     val proto = points.map(lp => ProtoPoint(
-      time = lp.timeNs, name = lp.measurement, database = db,
-      retentionPolicy = rp, group = "", dimensions = Nil, tags = lp.tags,
+      time = lp.timeNs, name = lp.measurement, database = database,
+      retentionPolicy = retentionPolicy, group = "", dimensions = Nil, tags = lp.tags,
       fieldsDouble = lp.fieldsFloat, fieldsInt = lp.fieldsInt,
       fieldsString = lp.fieldsStr, fieldsBool = lp.fieldsBool,
       byName = false))
-    pipePoints(proto, cmd, options, taskId, nodeId, keepaliveMs).map(p =>
+    pipePoints(proto, agent, options, taskId, nodeId, keepaliveMs).map(p =>
       LineProtocol.LinePoint(p.name, p.tags, p.fieldsDouble, p.fieldsInt,
         p.fieldsBool, p.fieldsString, p.time))
   }

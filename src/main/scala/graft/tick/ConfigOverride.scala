@@ -43,9 +43,7 @@ object ConfigOverride {
       options: Seq[OptionSpec],
       elementKey: Option[String] = None,
       init: Map[String, Any] = Map.empty,
-      validate: Map[String, Any] => Option[String] = _ => None) {
-    private[tick] def optionNames: Set[String] = options.map(_.name).toSet
-  }
+      validate: Map[String, Any] => Option[String] = _ => None)
 
   /** services/config Override (override.go:34-48). */
   final case class Override(

@@ -506,8 +506,6 @@ object TickJson {
     lastCall(nd, name).flatMap(_.args.headOption).map(anyStr).getOrElse(default)
   private def propLong(nd: Node, name: String, default: Long = 0L): Long =
     lastCall(nd, name).flatMap(_.args.headOption).map(anyLong).getOrElse(default)
-  private def propDouble(nd: Node, name: String, default: Double = 0.0): Double =
-    lastCall(nd, name).flatMap(_.args.headOption).map(anyDouble).getOrElse(default)
   private def propFlag(nd: Node, name: String): Boolean = calls(nd, name).nonEmpty
   private def propDurStr(nd: Node, name: String, defaultNs: Long = 0L): JV =
     JStr(formatDuration(lastCall(nd, name).flatMap(_.args.headOption)

@@ -783,7 +783,8 @@ object TickScript {
 
   /** Registry entry like [[processUdf]], but for an UNMODIFIED reference
     * protobuf agent (the varint-framed udf.proto protocol — the exact
-    * child the reference's `[udf.functions.x]` config launches): node
+    * agent the reference's `[udf.functions.x]` config attaches, as a
+    * child process or a unix socket, whichever `agent` names): node
     * properties become `InitRequest.options` (pipeline/udf.go maps
     * `.alpha(0.5)` the same way), `inFields` split into the typed
     * fieldsDouble/Int/String/Bool maps by column type exactly like the
@@ -795,7 +796,7 @@ object TickScript {
     * (a name in the wrong list reads the wrong typed map → null, the
     * same miss a reference task sees when a field changes type). */
   def protobufUdf(
-      cmd: Seq[String],
+      agent: graft.sources.UdfProto.Agent,
       tagCols: Seq[String],
       inFields: Seq[String],
       outFields: Seq[String],
@@ -804,43 +805,6 @@ object TickScript {
       timeCol: String = "time",
       measurementCol: String = "measurement",
       propsToOptions: Seq[Call] => Seq[(String, Seq[graft.sources.UdfProto.OptVal])] = defaultUdfOptions)
-      : (DataFrame, Seq[Call]) => DataFrame =
-    protobufUdfWith((pts, opts) => graft.sources.UdfProto.pipePoints(pts, cmd, opts),
-      tagCols, inFields, outFields, outFieldsStr, outFieldsBool,
-      timeCol, measurementCol, propsToOptions)
-
-  /** [[protobufUdf]] against a long-running unix-socket agent server —
-    * the reference's `[udf.functions.x] socket = "/path"` attachment
-    * (services/udf/config.go:20-47): no child is spawned; each partition
-    * dials one connection. */
-  def protobufSocketUdf(
-      socketPath: String,
-      tagCols: Seq[String],
-      inFields: Seq[String],
-      outFields: Seq[String],
-      outFieldsStr: Seq[String] = Nil,
-      outFieldsBool: Seq[String] = Nil,
-      timeCol: String = "time",
-      measurementCol: String = "measurement",
-      propsToOptions: Seq[Call] => Seq[(String, Seq[graft.sources.UdfProto.OptVal])] = defaultUdfOptions)
-      : (DataFrame, Seq[Call]) => DataFrame =
-    protobufUdfWith(
-      (pts, opts) => graft.sources.UdfProto.pipePointsSocket(pts, socketPath, opts),
-      tagCols, inFields, outFields, outFieldsStr, outFieldsBool,
-      timeCol, measurementCol, propsToOptions)
-
-  private def protobufUdfWith(
-      pipe: (org.apache.spark.sql.Dataset[graft.sources.UdfProto.ProtoPoint],
-             Seq[(String, Seq[graft.sources.UdfProto.OptVal])])
-        => org.apache.spark.sql.Dataset[graft.sources.UdfProto.ProtoPoint],
-      tagCols: Seq[String],
-      inFields: Seq[String],
-      outFields: Seq[String],
-      outFieldsStr: Seq[String],
-      outFieldsBool: Seq[String],
-      timeCol: String,
-      measurementCol: String,
-      propsToOptions: Seq[Call] => Seq[(String, Seq[graft.sources.UdfProto.OptVal])])
       : (DataFrame, Seq[Call]) => DataFrame = (df, props) => {
     import graft.sources.UdfProto
     val spark = df.sparkSession
@@ -851,7 +815,7 @@ object TickScript {
       .map { case (t, n, tg, fd, fi, fs, fb) =>
         UdfProto.ProtoPoint(t, n, "", "", "", Nil, tg, fd, fi, fs, fb, byName = false)
       }
-    protoPointsFrame(pipe(pts, propsToOptions(props)).toDF(),
+    protoPointsFrame(UdfProto.pipePoints(pts, agent, propsToOptions(props)).toDF(),
       tagCols, outFields, outFieldsStr, outFieldsBool, timeCol, measurementCol)
   }
 
@@ -922,7 +886,7 @@ object TickScript {
     * holds). Output typing follows [[protobufUdf]]: numeric `outFields`,
     * typed `outFieldsStr`/`outFieldsBool`. */
   def protobufBatchUdf(
-      cmd: Seq[String],
+      agent: graft.sources.UdfProto.Agent,
       tagCols: Seq[String],
       inFields: Seq[String],
       outFields: Seq[String],
@@ -938,7 +902,7 @@ object TickScript {
     import spark.implicits._
     val batches = assembleUdfBatches(df, tagCols, inFields, timeCol,
       measurementCol, bucketCol)
-    val out = UdfProto.pipeBatches(batches, cmd, propsToOptions(props))
+    val out = UdfProto.pipeBatches(batches, agent, propsToOptions(props))
       .flatMap(b => b.points.map(p =>
         (b.name, b.tags, p.time, p.tags, p.fieldsDouble, p.fieldsInt,
           p.fieldsString, p.fieldsBool)))
@@ -974,7 +938,7 @@ object TickScript {
     * provides a stream. Input assembly is [[protobufBatchUdf]]'s; output
     * typing follows [[protobufUdf]]. */
   def protobufBatchToPointsUdf(
-      cmd: Seq[String],
+      agent: graft.sources.UdfProto.Agent,
       tagCols: Seq[String],
       inFields: Seq[String],
       outFields: Seq[String],
@@ -989,7 +953,7 @@ object TickScript {
     val batches = assembleUdfBatches(df, tagCols, inFields, timeCol,
       measurementCol, bucketCol)
     protoPointsFrame(
-      UdfProto.pipeBatchesToPoints(batches, cmd, propsToOptions(props)).toDF(),
+      UdfProto.pipeBatchesToPoints(batches, agent, propsToOptions(props)).toDF(),
       tagCols, outFields, outFieldsStr, outFieldsBool, timeCol, measurementCol)
   }
 

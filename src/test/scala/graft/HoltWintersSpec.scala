@@ -89,17 +89,6 @@ class HoltWintersSpec extends SparkSpec {
     assert(got.toSeq == direct.map(p => (p.t, p.v)).toSeq)
   }
 
-  test("distributed restarts pick the same winner as the serial fit") {
-    val df = series.zipWithIndex.map { case (v, i) => ("g", i.toLong, v) }
-      .toDF("g", "t", "v").repartition(8)
-    val dist = HoltWinters.holtWintersDistributed(df, "g", "t", "v", 5, m, 1L)
-      .orderBy("t").select("t", "v").as[(Long, Double)].collect().toSeq
-    val serial = HoltWinters.run(
-      series.zipWithIndex.map { case (v, i) => HoltWinters.TV(i.toLong, v) }.toArray,
-      5, m, 1L, withFit = false).map(p => (p.t, p.v)).toSeq
-    assert(dist == serial)
-  }
-
   test("holtWintersAuto matches the serial fit on all three dispatch branches") {
     val df = series.zipWithIndex.map { case (v, i) => ("g", i.toLong, v) }
       .toDF("g", "t", "v").repartition(8)

@@ -100,7 +100,7 @@ class NativeExprParitySpec extends SparkSpec {
       "MIXED Case ÄÖÜ STRASSE İstanbul ΣΟΦΙΑ",
       "non breaking space stays one token", // NBSP is not \s
       "multi   runs\t\t\nof   whitespace",
-      "", "   ", "controlbytes",
+      "", "   ", "\u0001control\u0002bytes",
       "emoji 🙂 and ℻ digits １２３")
     val d2 = edge.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val native = d2.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))

@@ -82,6 +82,15 @@ class SourcesSpec extends SparkSpec {
     assert(fs.toMap.apply("tags") === JObj(Seq("k\"ey" -> JStr("two\nlines"))))
   }
 
+  test("result renderer writes numbers and times like Go's encoding/json") {
+    val r = ResultRenderer.Result(Seq(ResultRenderer.Series(
+      "m", Map("host" -> "a"), Seq("time", "mean", "tiny", "n"),
+      Seq(Seq(new java.sql.Timestamp(1500), 85.0, 1e-7, 3L)))))
+    assert(ResultRenderer.toJson(r) ===
+      """{"series":[{"name":"m","tags":{"host":"a"},"columns":["time","mean","tiny","n"],""" +
+      """"values":[["1970-01-01T00:00:01.5Z",85,1e-7,3]]}]}""")
+  }
+
   test("sideload overlays most-specific config, falls back to default") {
     val points = Seq(("x", 1L), ("y", 2L), ("z", 3L)).toDF("kind", "id")
     val config = Seq(

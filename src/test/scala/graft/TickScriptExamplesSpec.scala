@@ -128,9 +128,16 @@ class TickScriptExamplesSpec extends SparkSpec {
 
   test("telegraf generic examples are sed-templates, not TICKscript (non-goal)") {
     // `var info = {info_level}` — `{` is not a DSL token; the reference
-    // cannot define these either, they exist to be sed-filled
-    for (f <- Seq("telegraf/generic_stream_example.tick",
-        "telegraf/generic_batch_example.tick"))
-      intercept[Exception](TickScript.compile(read(f), telegraf))
+    // cannot define these either, they exist to be sed-filled. The
+    // scripts below are in-repo text with such `{name}` holes where a
+    // value belongs (a var, a property argument), so no missing file can
+    // stand in for the refusal under test.
+    for (script <- Seq(
+        "var info = {info_level}\nstream\n    |from()\n        .measurement('cpu')\n",
+        "stream\n    |from()\n        .measurement({measurement})\n")) {
+      // refused by the parser, at the placeholder's `{`
+      val e = intercept[IllegalArgumentException](TickScript.compile(script, telegraf))
+      assert(e.getMessage.contains("{"), e.getMessage)
+    }
   }
 }

@@ -99,7 +99,7 @@ class UdfAgentSpec extends SparkSpec {
       Map("v" -> i * 1.0), Map.empty, Map.empty, Map.empty, byName = false))
     val out = UdfProto.pipePoints(
         spark.createDataset(pts).coalesce(2),
-        Seq("java", "-cp", javaCp, "graft.tools.ScaleAgent"),
+        Agent.Process(Seq("java", "-cp", javaCp, "graft.tools.ScaleAgent")),
         options = Seq("factor" -> Seq(OptDouble(2.5))))
       .collect().sortBy(_.time)
     assert(out.length === 20)
@@ -151,7 +151,8 @@ class UdfAgentSpec extends SparkSpec {
       val one = Seq(ProtoPoint(1L, "m", "", "", "", Nil, Map.empty,
         Map("v" -> 2.0), Map.empty, Map.empty, Map.empty, byName = false))
       def run(opts: Seq[(String, Seq[OptVal])]) =
-        UdfProto.runSocketAgentPartition(path.toString, opts, "t", "n", one.iterator).toList
+        UdfProto.runAgentPartition(Agent.Socket(path.toString), opts, "t", "n", one.iterator)
+          .toList
       assert(run(Seq("factor" -> Seq(OptDouble(5.0)),
         "label" -> Seq(OptString("x"), OptInt(3))))
         .head.fieldsDouble("v") === 10.0)
@@ -203,8 +204,8 @@ class UdfAgentSpec extends SparkSpec {
           (1 to 2).map(i => ProtoPoint(i * 1000L, "", "", "", "host=b", Nil,
             Map.empty, Map.empty,
             Map("other" -> i.toLong), Map.empty, Map.empty, byName = false))))
-      val out = UdfProto.runSocketBatchToPointsPartition(
-        path.toString, Nil, "t", "n", batches.iterator).toList.sortBy(_.group)
+      val out = UdfProto.runBatchToPointsPartition(
+        Agent.Socket(path.toString), Nil, "t", "n", batches.iterator).toList.sortBy(_.group)
       assert(out.map(p => (p.group, p.fieldsDouble("vmax"), p.fieldsInt("n"))) ===
         List(("host=a", 4.0, 4L), ("host=b", 0.0, 2L)))
     } finally server.close()
@@ -230,8 +231,8 @@ class UdfAgentSpec extends SparkSpec {
       val pts = (1 to 30).map(i => ProtoPoint(
         i * 1000L, "cpu", "", "", "", Nil, Map.empty, Map("v" -> i * 1.0),
         Map.empty, Map.empty, Map.empty, byName = false))
-      val out = UdfProto.pipePointsSocket(
-          spark.createDataset(pts).repartition(3), path.toString,
+      val out = UdfProto.pipePoints(
+          spark.createDataset(pts).repartition(3), Agent.Socket(path.toString),
           options = Seq("factor" -> Seq(OptDouble(3.0))))
         .collect().sortBy(_.time)
       assert(out.length === 30)
@@ -265,7 +266,7 @@ class UdfAgentSpec extends SparkSpec {
         ("cpu", "a", new java.sql.Timestamp(1000), 1.5),
         ("cpu", "b", new java.sql.Timestamp(2000), 2.5))
         .toDF("measurement", "host", "time", "value")
-      val agent = TickScript.protobufSocketUdf(path.toString,
+      val agent = TickScript.protobufUdf(Agent.Socket(path.toString),
         tagCols = Seq("host"), inFields = Seq("value"), outFields = Seq("value"))
       val out = TickScript.compile(
           """stream
@@ -302,8 +303,8 @@ class UdfAgentSpec extends SparkSpec {
         points = (1 to 3 + g).map(i => ProtoPoint(
           i.toLong, "", "", "", s"g=$g", Nil, Map.empty, Map("v" -> i * 1.0),
           Map.empty, Map.empty, Map.empty, byName = false))))
-      val out = UdfProto.pipeBatchesSocket(
-          spark.createDataset(batches).coalesce(1), path.toString)
+      val out = UdfProto.pipeBatches(
+          spark.createDataset(batches).coalesce(1), Agent.Socket(path.toString))
         .collect().sortBy(_.group)
       assert(out.length === 2)
       out.zip(batches).foreach { case (o, b) =>
@@ -313,13 +314,47 @@ class UdfAgentSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("TICKscript binds a BATCH→STREAM socket agent: same rows as the child process") {
+    import graft.tick.TickScript
+    val rows = for {
+      h <- Seq("a", "b")
+      (t, v) <- Seq((1, 1.0), (3, 5.0), (5, 2.0), (12, 7.0), (14, 4.0))
+    } yield ("cpu", h, new java.sql.Timestamp(t * 1000L),
+      v + (if (h == "b") 10.0 else 0.0))
+    val source = rows.toDF("measurement", "host", "time", "value")
+    val script =
+      """stream
+        ||from().measurement('cpu').groupBy('host')
+        ||window().period(10s).every(10s)
+        ||@bagg().field('value')
+        |""".stripMargin
+    def run(agent: Agent) = TickScript.compile(script, source, udfs = Map("bagg" ->
+        TickScript.protobufBatchToPointsUdf(agent,
+          tagCols = Seq("host"), inFields = Seq("value"), outFields = Seq("vmax"))))
+      .select("host", "time", "vmax")
+      .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getDouble(2)))
+      .sortBy(t => (t._1, t._2)).toSeq
+    val viaProcess = run(Agent.Process(
+      Seq("java", "-cp", javaCp, "graft.tools.BatchAggAgent")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_udf_sockb2p")
+    val path = dir.resolve("bagg.sock")
+    val server = UdfAgent.serveSocket(path, () => graft.tools.BatchAggAgent.handler())
+    try {
+      val viaSocket = run(Agent.Socket(path.toString))
+      assert(viaSocket === viaProcess)
+      assert(viaSocket === Seq(
+        ("a", 5000L, 5.0), ("a", 14000L, 7.0),
+        ("b", 5000L, 15.0), ("b", 14000L, 17.0)))
+    } finally server.close()
+  }
+
   test("MovingAvgAgent matches a driver-side moving average per group") {
     val pts = (1 to 24).map(i => ProtoPoint(
       i * 1000L, "cpu", "", "", "", Nil, Map("host" -> s"h${i % 2}"),
       Map("value" -> i * 1.0), Map.empty, Map.empty, Map.empty, byName = false))
     val out = UdfProto.pipePoints(
         spark.createDataset(pts).coalesce(1), // one child: windowed state is per process
-        Seq("java", "-cp", javaCp, "graft.tools.MovingAvgAgent"),
+        Agent.Process(Seq("java", "-cp", javaCp, "graft.tools.MovingAvgAgent")),
         options = Seq("field" -> Seq(OptString("value")),
           "size" -> Seq(OptInt(3)), "as" -> Seq(OptString("avg"))))
       .collect().sortBy(_.time)

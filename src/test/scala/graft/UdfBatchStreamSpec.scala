@@ -57,7 +57,8 @@ class UdfBatchStreamSpec extends SparkSpec {
   test("assembleBatches ∘ pipeBatches: a real BATCH agent rides the stream end-to-end") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
-    val cmd = Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent")
+    val cmd = UdfProto.Agent.Process(
+      Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent"))
     val ms = MemoryStream[ProtoPoint]
     val q = UdfProto.pipeBatches(
         UdfBatchStream.assembleBatches(ms.toDS(), periodS = 10L), cmd)

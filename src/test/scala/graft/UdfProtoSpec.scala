@@ -473,7 +473,7 @@ class UdfProtoAgentSpec extends SparkSpec {
       byName = false))
     val ds = spark.createDataset(pts).repartition(3)
     val out = UdfProto.pipePoints(ds,
-      Seq("python3", "-u", stubPath, "ok"),
+      Agent.Process(Seq("python3", "-u", stubPath, "ok")),
       options = Seq(
         "field" -> Seq(OptString("load")),
         "size"  -> Seq(OptInt(7), OptBool(true))),
@@ -498,7 +498,7 @@ class UdfProtoAgentSpec extends SparkSpec {
       """weather,loc=eu temp=-4.5 2000""").toDS()
     val parsed = graft.sources.LineProtocol.parse(lines)
     val out = UdfProto.pipeLinePoints(parsed,
-      Seq("python3", "-u", stubPath, "ok"), database = "mydb")
+      Agent.Process(Seq("python3", "-u", stubPath, "ok")), database = "mydb")
       .collect().sortBy(_.timeNs)
     assert(out.length === 2)
     assert(out(0).fieldsFloat("temp") === 40.0)
@@ -516,7 +516,7 @@ class UdfProtoAgentSpec extends SparkSpec {
       ("mem", "a", new java.sql.Timestamp(3000), 9.0))
       .toDF("measurement", "host", "time", "value")
     val agent = TickScript.protobufUdf(
-      Seq("python3", "-u", stubPath, "ok"),
+      Agent.Process(Seq("python3", "-u", stubPath, "ok")),
       tagCols = Seq("host"), inFields = Seq("value"), outFields = Seq("value"))
     val script =
       """stream
@@ -539,7 +539,7 @@ class UdfProtoAgentSpec extends SparkSpec {
       ("cpu", "b", new java.sql.Timestamp(2000), 2.5, false))
       .toDF("measurement", "host", "time", "value", "up")
     val agent = TickScript.protobufUdf(
-      Seq("python3", "-u", stubPath, "ok"),
+      Agent.Process(Seq("python3", "-u", stubPath, "ok")),
       tagCols = Seq("host"), inFields = Seq("value", "up"),
       outFields = Seq("value"),
       outFieldsStr = Seq("opts"), outFieldsBool = Seq("up"))
@@ -566,7 +566,7 @@ class UdfProtoAgentSpec extends SparkSpec {
     // through the Python stub (independent codec) and assert identity
     // modulo the stub's documented transforms (doubles x2, +agent tag,
     // +opts string field).
-    val nasty = "a\nb\t\"c\"\\d,e=f 漢字 π end"
+    val nasty = "a\nb\t\"c\"\\d,e=f 漢字 π\u0000end"
     val rnd = new scala.util.Random(14L)
     def rs(): String = (0 until rnd.nextInt(12)).map(_ => nasty(rnd.nextInt(nasty.length))).mkString
     val pts = (1 to 200).map { i =>
@@ -587,7 +587,7 @@ class UdfProtoAgentSpec extends SparkSpec {
     val indexed = pts.zipWithIndex.map { case (p, i) => p.copy(time = i.toLong + 1) }
     val out = UdfProto.pipePoints(
         spark.createDataset(indexed).repartition(4),
-        Seq("python3", "-u", stubPath, "ok"))
+        Agent.Process(Seq("python3", "-u", stubPath, "ok")))
       .collect().sortBy(_.time)
     assert(out.length === 200)
     out.zip(indexed).foreach { case (o, p) =>
@@ -609,7 +609,8 @@ class UdfProtoAgentSpec extends SparkSpec {
       fieldsDouble = Map("v" -> i * 1.5), fieldsInt = Map.empty,
       fieldsString = Map.empty, fieldsBool = Map.empty, byName = false))
     val ms = MemoryStream[ProtoPoint]
-    val q = UdfProto.pipePoints(ms.toDS(), Seq("python3", "-u", stubPath, "ok"))
+    val q = UdfProto.pipePoints(ms.toDS(),
+        Agent.Process(Seq("python3", "-u", stubPath, "ok")))
       .writeStream.format("memory").queryName("udfproto_par")
       .outputMode("append").start()
     try {
@@ -618,7 +619,7 @@ class UdfProtoAgentSpec extends SparkSpec {
       val streamed = spark.table("udfproto_par").as[ProtoPoint].collect()
         .sortBy(_.time)
       val batch = UdfProto.pipePoints(
-        spark.createDataset(pts), Seq("python3", "-u", stubPath, "ok"))
+        spark.createDataset(pts), Agent.Process(Seq("python3", "-u", stubPath, "ok")))
         .collect().sortBy(_.time)
       assert(streamed.toSeq === batch.toSeq)
       assert(batch.length === 30 && batch.head.fieldsDouble("v") === 3.0)
@@ -638,7 +639,7 @@ class UdfProtoAgentSpec extends SparkSpec {
     val ds = spark.createDataset(pts).coalesce(1)
     val t0 = System.nanoTime()
     val e = intercept[org.apache.spark.SparkException] {
-      UdfProto.pipePoints(ds, Seq("python3", "-u", stubPath, "stall"),
+      UdfProto.pipePoints(ds, Agent.Process(Seq("python3", "-u", stubPath, "stall")),
         keepaliveMs = 400L).collect()
     }
     assert(e.getMessage.contains("keepalive timeout"))
@@ -649,7 +650,7 @@ class UdfProtoAgentSpec extends SparkSpec {
     val t1 = System.nanoTime()
     val e2 = intercept[org.apache.spark.SparkException] {
       UdfProto.pipePoints(spark.createDataset(pts.take(5)).coalesce(1),
-        Seq("sleep", "3600"), keepaliveMs = 400L).collect()
+        Agent.Process(Seq("sleep", "3600")), keepaliveMs = 400L).collect()
     }
     assert(e2.getMessage.contains("keepalive timeout"))
     assert((System.nanoTime() - t1) / 1e9 < 30, "handshake hang not killed")
@@ -659,7 +660,7 @@ class UdfProtoAgentSpec extends SparkSpec {
     // fully loaded 32-thread suite python3 can take >200ms to first write,
     // so the healthy-child window is deliberately generous
     val small = spark.createDataset(pts.take(10)).coalesce(1)
-    val ok = UdfProto.pipePoints(small, Seq("python3", "-u", stubPath, "ok"),
+    val ok = UdfProto.pipePoints(small, Agent.Process(Seq("python3", "-u", stubPath, "ok")),
       keepaliveMs = 1500L).collect().sortBy(_.time)
     assert(ok.length === 10)
     assert(ok.map(_.fieldsDouble("v")).toSeq === (1 to 10).map(_ * 2.0))
@@ -677,7 +678,7 @@ class UdfProtoAgentSpec extends SparkSpec {
     // prober test above); the pause stays well beyond it so the property
     // (consumer-side stalls don't starve the timer) is still exercised
     val it = UdfProto.runAgentPartition(
-      Seq("python3", "-u", stubPath, "ok"), Nil, "t", "n",
+      Agent.Process(Seq("python3", "-u", stubPath, "ok")), Nil, "t", "n",
       pts.iterator, keepaliveMs = 700L)
     val acc = scala.collection.mutable.ArrayBuffer.empty[ProtoPoint]
     while (it.hasNext) {
@@ -699,7 +700,8 @@ class UdfProtoAgentSpec extends SparkSpec {
     }
     val out = UdfProto.pipeBatches(
         spark.createDataset(batches).coalesce(2),
-        Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent"),
+        Agent.Process(
+          Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent")),
         options = Seq("field" -> Seq(OptString("value"))))
       .collect().sortBy(_.group)
     assert(out.length === 3)
@@ -729,7 +731,7 @@ class UdfProtoAgentSpec extends SparkSpec {
     }
     val out = UdfProto.pipeBatches(
         spark.createDataset(batches).coalesce(1),
-        Seq("python3", "-u", stubPath, "batch"))
+        Agent.Process(Seq("python3", "-u", stubPath, "batch")))
       .collect().sortBy(_.group)
     assert(out.length === 2)
     out.zip(batches).foreach { case (o, b) =>
@@ -756,7 +758,8 @@ class UdfProtoAgentSpec extends SparkSpec {
     }
     val out = UdfProto.pipeBatchesToPoints(
         spark.createDataset(batches).coalesce(1),
-        Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchAggAgent"))
+        Agent.Process(
+          Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchAggAgent")))
       .collect().sortBy(_.group)
     assert(out.length === 3)
     out.zip(batches).foreach { case (p, b) =>
@@ -776,7 +779,8 @@ class UdfProtoAgentSpec extends SparkSpec {
       v + (if (h == "b") 10.0 else 0.0))
     val source = rows.toDF("measurement", "host", "time", "value")
     val agent = TickScript.protobufBatchUdf(
-      Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent"),
+      Agent.Process(
+        Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent")),
       tagCols = Seq("host"), inFields = Seq("value"),
       outFields = Seq("value", "vmax", "batch_n"))
     val script =
@@ -822,7 +826,8 @@ class UdfProtoAgentSpec extends SparkSpec {
       v + (if (h == "b") 10.0 else 0.0))
     val source = rows.toDF("measurement", "host", "time", "value")
     val agent = TickScript.protobufBatchToPointsUdf(
-      Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchAggAgent"),
+      Agent.Process(
+        Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchAggAgent")),
       tagCols = Seq("host"), inFields = Seq("value"), outFields = Seq("vmax"))
     val script =
       """stream
@@ -856,7 +861,8 @@ class UdfProtoAgentSpec extends SparkSpec {
           Map.empty, Map("value" -> (i * 1.0 + g * 10)),
           Map.empty, Map.empty, Map.empty, byName = false)))
     }
-    val cmd = Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent")
+    val cmd = Agent.Process(
+      Seq("java", "-cp", sys.props("java.class.path"), "graft.tools.BatchStatsAgent"))
     val ms = MemoryStream[ProtoBatch]
     val q = UdfProto.pipeBatches(ms.toDS(), cmd)
       .writeStream.format("memory").queryName("udfproto_batches")
@@ -885,7 +891,7 @@ class UdfProtoAgentSpec extends SparkSpec {
       Map.empty, Map.empty, Map.empty, byName = false))).coalesce(1)
     val e1 = intercept[org.apache.spark.SparkException] {
       UdfProto.pipePoints(onePoint,
-        Seq("java", "-cp", cp, "graft.tools.BatchStatsAgent")).collect()
+        Agent.Process(Seq("java", "-cp", cp, "graft.tools.BatchStatsAgent"))).collect()
     }
     assert(e1.getMessage.contains("wants a BATCH edge"))
     val oneBatch = spark.createDataset(Seq(ProtoBatch(
@@ -895,7 +901,7 @@ class UdfProtoAgentSpec extends SparkSpec {
       .coalesce(1)
     val e2 = intercept[org.apache.spark.SparkException] {
       UdfProto.pipeBatches(oneBatch,
-        Seq("java", "-cp", cp, "graft.tools.ScaleAgent")).collect()
+        Agent.Process(Seq("java", "-cp", cp, "graft.tools.ScaleAgent"))).collect()
     }
     assert(e2.getMessage.contains("wants a STREAM edge"))
   }
@@ -908,20 +914,20 @@ class UdfProtoAgentSpec extends SparkSpec {
     // first life: 5 points, snapshot requested after the stream
     var snap: Array[Byte] = null
     val first = UdfProto.runAgentPartition(
-      Seq("java", "-cp", cp, "graft.tools.CounterAgent"), Nil, "t", "n",
+      Agent.Process(Seq("java", "-cp", cp, "graft.tools.CounterAgent")), Nil, "t", "n",
       pts(1 to 5).iterator, onSnapshot = b => snap = b).toList
     assert(first.map(_.fieldsInt("seq")) === (1L to 5L).toList)
     assert(snap != null && new String(snap, "UTF-8") === "5")
     // second life: restore replays the snapshot right after Init — the
     // sequence continues where the first process stopped
     val second = UdfProto.runAgentPartition(
-      Seq("java", "-cp", cp, "graft.tools.CounterAgent"), Nil, "t", "n",
+      Agent.Process(Seq("java", "-cp", cp, "graft.tools.CounterAgent")), Nil, "t", "n",
       pts(6 to 8).iterator, restoreSnapshot = Some(snap)).toList
     assert(second.map(_.fieldsInt("seq")) === List(6L, 7L, 8L))
     // a corrupt snapshot fails the handshake with the agent's message
     val e = intercept[RuntimeException] {
       UdfProto.runAgentPartition(
-        Seq("java", "-cp", cp, "graft.tools.CounterAgent"), Nil, "t", "n",
+        Agent.Process(Seq("java", "-cp", cp, "graft.tools.CounterAgent")), Nil, "t", "n",
         pts(1 to 1).iterator,
         restoreSnapshot = Some("junk".getBytes("UTF-8"))).toList
     }
@@ -933,11 +939,13 @@ class UdfProtoAgentSpec extends SparkSpec {
       1L, "m", "", "", "", Nil, Map.empty, Map("v" -> 1.0),
       Map.empty, Map.empty, Map.empty, byName = false))).coalesce(1)
     val e1 = intercept[org.apache.spark.SparkException] {
-      UdfProto.pipePoints(one, Seq("python3", "-u", stubPath, "failinit")).collect()
+      UdfProto.pipePoints(one,
+        Agent.Process(Seq("python3", "-u", stubPath, "failinit"))).collect()
     }
     assert(e1.getMessage.contains("init failed") && e1.getMessage.contains("bad options"))
     val e2 = intercept[org.apache.spark.SparkException] {
-      UdfProto.pipePoints(one, Seq("python3", "-u", stubPath, "senderror")).collect()
+      UdfProto.pipePoints(one,
+        Agent.Process(Seq("python3", "-u", stubPath, "senderror"))).collect()
     }
     assert(e2.getMessage.contains("agent blew up"))
   }
