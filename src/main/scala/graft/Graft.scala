@@ -48,6 +48,7 @@ object Graft {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.ui.enabled", "false")
       .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
+      .config(LocalCheckpointFsConf)
       .getOrCreate()
   }
 
@@ -60,6 +61,15 @@ object Graft {
     * 1,373 distinct classes at sf0.01 and 1,374 at sf0.1; this is about
     * three times that. */
   val CodegenCacheEntries: Int = 4096
+
+  /** `file:` checkpoints (offsets, commits, state-store deltas) go through
+    * `LocalCheckpointFs`, which sets modes and reads link status without
+    * forking `chmod`/`readlink`; other schemes keep their filesystems. It is
+    * a SparkContext-wide Hadoop setting, so the test sessions set it too.
+    * Measured on a 4-core box: one 16 s `stream_ingest` run started 2,845
+    * processes with Hadoop's `LocalFs`, and 4 with this one. */
+  val LocalCheckpointFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[streaming.LocalCheckpointFs].getName)
 
   /** All driver-provided tables (TESTDATA.md). */
   val tableNames: Seq[String] = Seq(

@@ -24,5 +24,7 @@ object SparkSpec {
     // the generated-code cache is JVM-wide and static: size it as the
     // engine does, whichever session triggers codegen first
     .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, Graft.CodegenCacheEntries.toLong)
+    // checkpoints go through the engine's fork-free local filesystem
+    .config(Graft.LocalCheckpointFsConf)
     .getOrCreate()
 }

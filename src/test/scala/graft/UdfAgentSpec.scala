@@ -245,7 +245,7 @@ class UdfAgentSpec extends SparkSpec {
     } finally server.close()
   }
 
-  test("TICKscript |@udf() binds a socket agent (protobufSocketUdf)") {
+  test("TICKscript |@udf() binds a socket agent (protobufUdf(Agent.Socket))") {
     import graft.tick.TickScript
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_udf_socktick")
@@ -279,7 +279,7 @@ class UdfAgentSpec extends SparkSpec {
     } finally server.close()
   }
 
-  test("unix-socket BATCH agent server serves pipeBatchesSocket") {
+  test("unix-socket BATCH agent server serves pipeBatches(..., Agent.Socket)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_udf_sockb")
     val path = dir.resolve("batch.sock")
     val server = UdfAgent.serveSocket(path, () => new UdfAgent.Handler {
