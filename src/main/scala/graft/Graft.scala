@@ -47,29 +47,34 @@ object Graft {
       // build fits memory, and sort-merge remains the fallback.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.ui.enabled", "false")
-      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
-      .config(LocalCheckpointFsConf)
+      .config(EngineConf)
       .getOrCreate()
   }
 
-  /** Size of the JVM-wide generated-code cache. It is a static conf, and
-    * whichever session first triggers codegen fixes it for the JVM, so the
-    * test sessions set it too. Spark's default of 100 is below one batch
-    * task rotation's working set (~240 classes), so at the default the LRU
-    * cycles and every re-run of a query compiles its classes with Janino
-    * again. Measured: one pass over all 121 `SparkEntry.queries` compiles
-    * 1,373 distinct classes at sf0.01 and 1,374 at sf0.1; this is about
-    * three times that. */
-  val CodegenCacheEntries: Int = 4096
-
-  /** `file:` checkpoints (offsets, commits, state-store deltas) go through
-    * `LocalCheckpointFs`, which sets modes and reads link status without
-    * forking `chmod`/`readlink`; other schemes keep their filesystems. It is
-    * a SparkContext-wide Hadoop setting, so the test sessions set it too.
-    * Measured on a 4-core box: one 16 s `stream_ingest` run started 2,845
-    * processes with Hadoop's `LocalFs`, and 4 with this one. */
-  val LocalCheckpointFsConf: Map[String, String] = Map(
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[streaming.LocalCheckpointFs].getName)
+  /** Engine settings that every session applies, the test sessions
+    * included. Each is static or SparkContext-wide: whichever session
+    * starts the JVM's SparkContext fixes it.
+    *   - The generated-code cache size. Spark's default of 100 is below
+    *     one batch task rotation's working set (~240 classes), so at the
+    *     default the LRU cycles and every re-run of a query compiles its
+    *     classes with Janino again. Measured: one pass over all 121
+    *     `SparkEntry.queries` compiles 1,373 distinct classes at sf0.01
+    *     and 1,374 at sf0.1; 4096 is about three times that.
+    *   - `GraftExtensions`: the native SQL functions, and the rule that
+    *     sorts a small global sort's input in one task
+    *     (`SmallSortSinglePartition`).
+    *   - `file:` through filesystems that set modes and read link status
+    *     without forking `chmod`/`readlink`: `LocalCheckpointFs` for
+    *     `FileContext` (checkpoint offsets, commits, state-store deltas)
+    *     and `ForkFreeChecksumFileSystem` for the FileSystem API (parquet
+    *     writes). Other schemes keep their filesystems. Measured on a
+    *     4-core box: one 16 s `stream_ingest` run started 2,845 processes
+    *     with Hadoop's `LocalFs`, and 4 with `LocalCheckpointFs`. */
+  val EngineConf: Map[String, String] = Map(
+    StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> "4096",
+    StaticSQLConf.SPARK_SESSION_EXTENSIONS.key -> classOf[GraftExtensions].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[streaming.LocalCheckpointFs].getName,
+    "spark.hadoop.fs.file.impl" -> classOf[streaming.ForkFreeChecksumFileSystem].getName)
 
   /** All driver-provided tables (TESTDATA.md). */
   val tableNames: Seq[String] = Seq(

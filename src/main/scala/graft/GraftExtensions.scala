@@ -3,12 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 
-/** Spark extensions entry point: registers graft's native expressions at
-  * session build time, so a cluster user enables the whole library with
+/** Spark extensions entry point: registers graft's native expressions and
+  * planner rules at session build time, so a cluster user enables the
+  * whole library with
   *   spark.sql.extensions=graft.GraftExtensions
   * and gets `graft_dot` / `graft_minhash16` in SQL and Column-land on every
-  * session, no per-session registration calls. */
+  * session, no per-session registration calls. `Graft.EngineConf` sets it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -32,5 +37,36 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.expressions.IntersectCountSorted].getName, "graft_isect"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         graft.expressions.IntersectCountSorted(exprs(0), exprs(1))))
+    // AQE runs its stage-prep rules on the initial plan and again at every
+    // re-optimisation, so the size test below sees runtime statistics once
+    // the sort's input stage has run
+    ext.injectQueryStagePrepRule(_ => SmallSortSinglePartition)
+  }
+}
+
+/** A global sort whose input is at most `spark.sql.autoBroadcastJoinThreshold`
+  * sorts in one task. The planner meets a sort's ordered distribution with
+  * a range exchange, and `RangePartitioner` first runs a sampling job that
+  * recomputes everything since the previous shuffle, so a small sorted
+  * result computes its last stage twice. A single-partition exchange also
+  * satisfies the ordered distribution: no sampling job runs, and the sort
+  * above it sorts that one partition.
+  *
+  * The input size is the logical statistics of the exchange's child: the
+  * scan estimate in the initial plan, and the materialised stages' runtime
+  * sizes at each AQE re-optimisation. Only an exchange the planner added
+  * to meet a requirement changes; a user's `repartitionByRange` keeps its
+  * partitions. Above the threshold, with the threshold disabled (-1), or
+  * with AQE off (the rule is AQE's), the plan keeps its range exchange, so
+  * a sort larger than a broadcast still range-partitions. */
+object SmallSortSinglePartition extends Rule[SparkPlan] {
+  override def apply(plan: SparkPlan): SparkPlan = {
+    val threshold = conf.autoBroadcastJoinThreshold
+    if (threshold < 0) plan
+    else plan.transformUp {
+      case e @ ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _)
+          if child.logicalLink.exists(_.stats.sizeInBytes <= threshold) =>
+        e.copy(outputPartitioning = SinglePartition)
+    }
   }
 }

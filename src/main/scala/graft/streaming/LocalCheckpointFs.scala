@@ -6,7 +6,7 @@ import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, Path, RawLocalFileSystem}
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -44,7 +44,7 @@ class ForkFreeLocalFileSystem extends RawLocalFileSystem {
   * filesystem underneath. Both Hadoop constructors are package-private, so
   * this mirrors them; `AbstractFileSystem.get` looks up the (URI,
   * Configuration) constructor, and, as in `LocalFs`, the URI is always
-  * `file:///`. `Graft.LocalCheckpointFsConf` installs it. */
+  * `file:///`. `Graft.EngineConf` installs it. */
 class LocalCheckpointFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new LocalCheckpointFs.Raw(conf))
 
@@ -58,3 +58,10 @@ object LocalCheckpointFs {
     override def isValidName(src: String): Boolean = true
   }
 }
+
+/** The `file:` `FileSystem` (`fs.file.impl`) behind every FileSystem-API
+  * caller, parquet writes among them: Hadoop's `LocalFileSystem` (`.crc`
+  * checksums) with the fork-free filesystem underneath, so a written file
+  * and its directories get their modes without a `chmod` process each.
+  * `Graft.EngineConf` installs it. */
+class ForkFreeChecksumFileSystem extends LocalFileSystem(new ForkFreeLocalFileSystem)

@@ -158,8 +158,9 @@ object TickScript {
     * arrives as int64 nanos, pipeline/udf.go), so an agent switching on
     * ValueType must see DURATION, not a bare DOUBLE. Node params unwrap
     * via [[num]] (seconds), identical arithmetic to the old bare-Double
-    * representation. Lambda-position durations stay second-scale ELit
-    * doubles (the repo's expression convention). */
+    * representation. In a lambda a duration stays `ELit(Dur)`, so it
+    * renders back as a duration; [[exprToColumn]] compiles it to its
+    * second count. */
   case class Dur(seconds: Double)
   /** A parsed script: template var defaults (literals/lambdas/lists),
     * declared-but-unbound template vars (name → type), and the chains. */
@@ -463,7 +464,7 @@ object TickScript {
       case TFieldRef(f) => EField(f)
       case TStr(v) => ELit(v)
       case TNum(v, i) => ELit(if (i) v.toLong else v)
-      case TDur(v) => ELit(v)
+      case TDur(v) => ELit(Dur(v))
       case TIdent("TRUE") => ELit(true)
       case TIdent("FALSE") => ELit(false)
       case TIdent(fn) if peek.contains(TOp("(")) =>
@@ -568,11 +569,7 @@ object TickScript {
     def substExpr(e: Expr): Expr = e match {
       case EVar(n) if scope.contains(n) => scope(n) match {
         case ex: Expr => substExpr(ex) // a var may reference further vars
-        // a duration var in a lambda position substitutes at second
-        // scale, exactly like a lambda-position duration LITERAL does
-        // (parsePrimary keeps ELit(Double) — the repo-wide expression
-        // convention for durations)
-        case Dur(s) => ELit(s)
+        // a duration var stays a duration, like a duration literal
         case v => ELit(v)
       }
       case EBin(op, l, r) => EBin(op, substExpr(l), substExpr(r))
@@ -611,6 +608,7 @@ object TickScript {
   def exprToColumn(e: Expr): Column = e match {
     case EField(f) => if (f.contains(".")) col(s"`$f`") else col(f)
     case ELit(c: Column) => c // pre-compiled stateful sub-expression
+    case ELit(Dur(s)) => lit(s) // durations compare and compute in seconds
     case ELit(v) => lit(v)
     case ENeg(x) => -exprToColumn(x)
     case EBin(op, l, r) =>

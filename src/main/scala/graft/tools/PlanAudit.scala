@@ -1,8 +1,13 @@
 package graft.tools
 
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Dev tool: scan every SparkEntry query's physical plan for scale
-  * red flags (cartesian products, single-partition exchanges outside the
-  * final result sort, nested-loop joins).
+  * red flags (cartesian products, single-partition exchanges other than
+  * the one directly under the root global sort, nested-loop joins).
   *
   * Known-intentional flags (all tiny-side broadcasts, reviewed):
   *   - q_deadman: bucket-range × group-universe cross join — both sides
@@ -36,12 +41,16 @@ object PlanAudit {
     spark.conf.set("spark.sql.adaptive.enabled", args.contains("aqe=1").toString)
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
+        val exec = fn(spark, dir).queryExecution.executedPlan
+        val plan = exec.toString
+        // every single-partition exchange but the one that feeds the root
+        // global sort: a small result sorts in one task (GraftExtensions)
+        val singles = "Exchange SinglePartition".r.findAllIn(plan).size -
+          (if (feedsRootSort(exec)) 1 else 0)
         val flags = Seq(
           "CartesianProduct" -> plan.contains("CartesianProduct"),
           "BroadcastNestedLoopJoin" -> plan.contains("BroadcastNestedLoopJoin"),
-          // exclude the final output sort (rangepartitioning is fine)
-          "SinglePartitionExchange" -> plan.contains("Exchange SinglePartition"))
+          "SinglePartitionExchange" -> (singles > 0))
           .filter(_._2).map(_._1)
         if (flags.nonEmpty) println(s"== FLAG $name: ${flags.mkString(",")}")
         // duplicate-work telemetry (the r20 tfidf class of defect): high
@@ -53,5 +62,13 @@ object PlanAudit {
     }
     println("== audit done")
     spark.stop()
+  }
+
+  /** Whether the plan's root is a global sort directly over a
+    * single-partition exchange (in an adaptive plan, the current one). */
+  private def feedsRootSort(p: SparkPlan): Boolean = p match {
+    case a: AdaptiveSparkPlanExec => feedsRootSort(a.executedPlan)
+    case SortExec(_, true, e: ShuffleExchangeExec, _) => e.outputPartitioning == SinglePartition
+    case _ => false
   }
 }

@@ -6,11 +6,11 @@ import java.util.EnumSet
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import graft.streaming.LocalCheckpointFs
+import graft.streaming.{ForkFreeChecksumFileSystem, LocalCheckpointFs}
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -43,31 +43,52 @@ class LocalCheckpointFsSpec extends SparkSpec {
     assert(fc.getDefaultFileSystem.isInstanceOf[LocalCheckpointFs])
   }
 
-  test("five checkpointed micro-batches start no process") {
-    implicit val ctx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft_ckfs").toString
+  /** The commands of the processes `body` started through Hadoop's
+    * filesystems or the streaming engine, each with its stack. Other
+    * threads may start processes in the same window (the JVM's first
+    * executor heartbeat runs `getconf PAGESIZE`; other suites' sessions
+    * clean up their artifacts with `rm -rf`); they do not count. */
+  private def processesStarted(body: => Unit): Seq[(String, Seq[String])] = {
     val jfr = Files.createTempFile("graft_ckfs", ".jfr")
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
-    try runBatches(ckpt, MemoryStream[(String, Double)], (1 to 5).map(batch),
-      new java.util.concurrent.ConcurrentHashMap[String, Double]())
+    try body
     finally { rec.stop(); rec.dump(jfr); rec.close() }
-    // count what the filesystem and the streaming engine started: other
-    // threads may start processes in the same window (the JVM's first
-    // executor heartbeat runs `getconf PAGESIZE`; other suites' sessions
-    // clean up their artifacts with `rm -rf`)
     val sources = Seq("org.apache.hadoop.fs.", "org.apache.spark.sql.execution.streaming.")
-    val started = RecordingFile.readAllEvents(jfr).asScala.toSeq
+    RecordingFile.readAllEvents(jfr).asScala.toSeq
       .map(e => e.getString("command") -> e.getStackTrace.getFrames.asScala.toSeq
         .map(f => f.getMethod.getType.getName + "." + f.getMethod.getName))
       .filter { case (_, frames) => frames.exists(f => sources.exists(f.startsWith)) }
-    val n = started.size
-    assert(n == 0, "first: " +
+  }
+
+  private def assertNone(started: Seq[(String, Seq[String])]): Unit =
+    assert(started.isEmpty, s"${started.size} started, first: " +
       started.headOption.map { case (cmd, frames) => cmd + " from " + frames.take(16).mkString(" < ") })
+
+  test("five checkpointed micro-batches start no process") {
+    implicit val ctx = spark.sqlContext
+    val ckpt = Files.createTempDirectory("graft_ckfs").toString
+    assertNone(processesStarted(runBatches(ckpt, MemoryStream[(String, Double)],
+      (1 to 5).map(batch), new java.util.concurrent.ConcurrentHashMap[String, Double]())))
     // the checkpoint really was written, with Hadoop's checksum companions
     assert(Files.exists(java.nio.file.Paths.get(ckpt, "commits", "4")))
     assert(Files.exists(java.nio.file.Paths.get(ckpt, "commits", ".4.crc")))
+  }
+
+  test("a parquet write goes through the fork-free FileSystem, starts no process, keeps .crc files") {
+    val out = Files.createTempDirectory("graft_ckfs_parquet").resolve("t")
+    val df = spark.range(0, 1000, 1, 4).selectExpr("id", "CAST(id * 2 AS DOUBLE) AS v")
+    assertNone(processesStarted(df.write.parquet(out.toString)))
+    assert(FileSystem.get(new java.net.URI("file:///"), spark.sessionState.newHadoopConf())
+      .isInstanceOf[ForkFreeChecksumFileSystem])
+    val names = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq
+    val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.nonEmpty, names)
+    parts.foreach(p => assert(names.contains("." + p + ".crc"), names))
+    assert(names.contains("_SUCCESS") && names.contains("._SUCCESS.crc"), names)
+    assert(spark.read.parquet(out.toString).orderBy("id").as[(Long, Double)].collect().toSeq ==
+      (0L until 1000L).map(i => (i, i * 2.0)))
   }
 
   /** One FileContext over stock `LocalFs` and one over `LocalCheckpointFs`,

@@ -309,4 +309,38 @@ class PlanSpec extends SparkSpec {
       assert(generates == 1, s"corpus tokenized $generates times, want 1")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
+
+  test("a global sort above the broadcast threshold keeps its range exchange") {
+    import spark.implicits._
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      // 20,000 longs are 160 kB to the planner: above a 1 kB threshold
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+      val df = spark.range(0, 20000, 1, 8).toDF().orderBy(($"id" % 1000).desc, $"id")
+      df.collect()
+      val p = plan(df) // the final adaptive plan, after execution
+      assert(p.contains("isFinalPlan=true"), p.take(500))
+      assert(p.contains("rangepartitioning"), s"range exchange lost above the threshold:\n${p.take(2000)}")
+      assert(!p.contains("Exchange SinglePartition"), p.take(2000))
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
+  }
+
+  test("repartitionByRange keeps the partitions it asks for under the small-sort rule") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.spark_partition_id
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      // far below the session's broadcast threshold, where a sort's own
+      // range exchange would become a single partition
+      val df = spark.range(0, 20000, 1, 4).repartitionByRange(8, $"id")
+      assert(df.select(spark_partition_id().as("p")).distinct().count() == 8)
+      assert(df.rdd.getNumPartitions == 8)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
 }

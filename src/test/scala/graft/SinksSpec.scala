@@ -80,9 +80,8 @@ class SinksSpec extends SparkSpec {
   }
 
   test("graft extensions inject native functions; SQL resolves them") {
-    // injection applies cleanly to a fresh extensions container
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    // the same builders, registered on a live session, resolve from SQL
+    // GraftExtensionsSpec checks the injected functions; the explicit
+    // register() calls resolve from SQL on a fresh session as well
     val s2 = spark.newSession()
     graft.expressions.DotProduct.register(s2)
     graft.expressions.MinHashSig.register(s2, 16)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -21,10 +20,8 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the generated-code cache is JVM-wide and static: size it as the
-    // engine does, whichever session triggers codegen first
-    .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, Graft.CodegenCacheEntries.toLong)
-    // checkpoints go through the engine's fork-free local filesystem
-    .config(Graft.LocalCheckpointFsConf)
+    // the engine's static and SparkContext-wide settings, whichever
+    // session starts the context first
+    .config(Graft.EngineConf)
     .getOrCreate()
 }

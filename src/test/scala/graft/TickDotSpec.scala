@@ -131,9 +131,7 @@ from1 [avg_exec_time_ns="0s" errors="0" working_cardinality="0" ];
     import org.apache.spark.sql.SparkSession
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", 2)
-      .config(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-        Graft.CodegenCacheEntries.toLong)
-      .config(Graft.LocalCheckpointFsConf)
+      .config(Graft.EngineConf)
       .getOrCreate()
     import spark.implicits._
     val reg = new graft.tick.TaskRegistry

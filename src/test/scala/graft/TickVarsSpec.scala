@@ -164,6 +164,27 @@ class TickVarsSpec extends AnyFunSuite {
     assert(gt(90.0) === "\"dt\" > 90s")
   }
 
+  test("a lambda's duration literal keeps its unit: exprString round trip and second-scale Column") {
+    import graft.tick.TickScript
+    import graft.tick.TickScript.{Dur, EBin, EField, ELit}
+    val parsed = TickScript.lambdaExpr("\"dt\" > 0s")
+    assert(parsed === EBin(">", EField("dt"), ELit(Dur(0.0))))
+    assert(TickVars.exprString(parsed) === "\"dt\" > 0s")
+    assert(TickVars.boundVars(Map("crit" -> parsed)) ===
+      Seq("crit" -> Var("lambda", Some("\"dt\" > 0s"), "")))
+    val mixed = "\"elapsed\" >= 90s AND \"age\" < 2m"
+    assert(TickVars.exprString(TickScript.lambdaExpr(mixed)) === mixed)
+    // a duration var substituted into a lambda stays a duration too
+    val resolved = TickScript.parseResolved(
+      "var d = 5s\nstream|from()|where(lambda: \"dt\" > d)")
+    val where = resolved.chains.flatMap(_.nodes).find(_.name == "where").get
+    assert(where.args === Seq(EBin(">", EField("dt"), ELit(Dur(5.0)))))
+    // the compiled predicate compares the field with the second count
+    import org.apache.spark.sql.functions.{col, lit}
+    assert(TickScript.exprToColumn(TickScript.lambdaExpr("\"dt\" > 1m")).toString ===
+      (col("dt") > lit(60.0)).toString)
+  }
+
   test("aliases of lambdas and lists stay vars (TypeOf is valid)") {
     val script =
       """var warn = lambda: "v" > 1.0
