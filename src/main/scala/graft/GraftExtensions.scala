@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 
 /** Spark extensions entry point: registers graft's native expressions and
@@ -41,7 +41,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // re-optimisation, so the size test below sees runtime statistics once
     // the sort's input stage has run
     ext.injectQueryStagePrepRule(_ => SmallSortSinglePartition)
+    // runs while an incremental execution prepares a micro-batch's
+    // executed plan, before codegen stages capture the scan
+    ext.injectColumnar(_ => MicroBatchInputRule)
   }
+}
+
+/** Keeps each micro-batch's input rows out of its plan
+  * ([[graft.streaming.MicroBatchInputOutOfPlan]]). */
+object MicroBatchInputRule extends ColumnarRule {
+  override def preColumnarTransitions: Rule[SparkPlan] = graft.streaming.MicroBatchInputOutOfPlan
 }
 
 /** A global sort whose input is at most `spark.sql.autoBroadcastJoinThreshold`

@@ -27,25 +27,28 @@ object LineProtocol {
       timeNs: Long)
 
   /** Split `s` on `sep` occurrences not preceded by a backslash and not
-    * inside double quotes. */
-  private def splitUnescaped(s: String, sep: Char): Seq[String] = {
+    * inside double quotes. A backslash skips the character after it and a
+    * quote toggles, so each piece is the substring between two splitting
+    * separators, escapes and quotes kept. */
+  private[graft] def splitUnescaped(s: String, sep: Char): Seq[String] = {
     val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
+    var from = 0
     var inQuotes = false
-    var escaped = false
-    s.foreach { c =>
-      if (escaped) { cur.append(c); escaped = false }
-      else if (c == '\\') { cur.append(c); escaped = true }
-      else if (c == '"') { cur.append(c); inQuotes = !inQuotes }
-      else if (c == sep && !inQuotes) { out += cur.result(); cur.clear() }
-      else cur.append(c)
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\\') i += 1
+      else if (c == '"') inQuotes = !inQuotes
+      else if (c == sep && !inQuotes) { out += s.substring(from, i); from = i + 1 }
+      i += 1
     }
-    out += cur.result()
+    out += s.substring(from)
     out.result()
   }
 
   private def unescape(s: String): String =
-    s.replace("\\,", ",").replace("\\ ", " ").replace("\\=", "=")
+    if (s.indexOf('\\') < 0) s
+    else s.replace("\\,", ",").replace("\\ ", " ").replace("\\=", "=")
 
   /** Parse one line; None for blank/comment lines. Malformed field sets
     * yield a point with no fields rather than an exception. */
@@ -106,23 +109,26 @@ object LineProtocol {
     * TRUNCATED to the precision (ParsePointsWithPrecision's
     * defaultTime.Truncate). */
   def parseLineWithPrecision(line: String, defaultTimeNs: Long,
-      precision: String): Option[LinePoint] = {
-    val mult = precisionMultiplier(precision)
+      precision: String): Option[LinePoint] =
+    parseLineScaled(line, defaultTimeNs, precisionMultiplier(precision))
+
+  private def parseLineScaled(line: String, defaultTimeNs: Long,
+      mult: Long): Option[LinePoint] =
     parseLine(line, Long.MinValue).map { p =>
       val t = if (p.timeNs == Long.MinValue) defaultTimeNs - defaultTimeNs % mult
         else p.timeNs * mult
       p.copy(timeNs = t)
     }
-  }
 
-  /** Distributed parse: lines → canonical points (partition-local). */
+  /** Distributed parse: lines → canonical points (partition-local). An
+    * unknown precision fails here, before any line is read. */
   def parse(lines: Dataset[String], defaultTimeNs: Long = 0L,
       precision: String = "n"): Dataset[LinePoint] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    if (precision == "n" || precision == "" || precision == "ns")
-      lines.flatMap(parseLine(_, defaultTimeNs))
-    else lines.flatMap(parseLineWithPrecision(_, defaultTimeNs, precision))
+    val mult = precisionMultiplier(precision)
+    if (mult == 1L) lines.flatMap(parseLine(_, defaultTimeNs))
+    else lines.flatMap(parseLineScaled(_, defaultTimeNs, mult))
   }
 
   /** Points as a DataFrame with an event-time column, ready for the Pipe

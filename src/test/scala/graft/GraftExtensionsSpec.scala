@@ -20,6 +20,7 @@ class GraftExtensionsSpec extends SparkSpec {
       }
       assert(s.sessionState.adaptiveRulesHolder.queryStagePrepRules
         .contains(SmallSortSinglePartition))
+      assert(s.sessionState.columnarRules.contains(MicroBatchInputRule))
     }
   }
 

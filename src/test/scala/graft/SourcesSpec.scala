@@ -58,6 +58,46 @@ class SourcesSpec extends SparkSpec {
     assert(hosts == Set("a", "b"))
   }
 
+  test("an unknown write precision fails when parse is called, even over no lines") {
+    val e = intercept[IllegalArgumentException](
+      LineProtocol.parse(spark.emptyDataset[String], precision = "x"))
+    assert(e.getMessage.contains("unknown precision 'x'"))
+  }
+
+  /** The splitter as it was first written, one character at a time into a
+    * builder: the definition the substring splitter must keep. */
+  private def splitByChars(s: String, sep: Char): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var inQuotes = false
+    var escaped = false
+    s.foreach { c =>
+      if (escaped) { cur.append(c); escaped = false }
+      else if (c == '\\') { cur.append(c); escaped = true }
+      else if (c == '"') { cur.append(c); inQuotes = !inQuotes }
+      else if (c == sep && !inQuotes) { out += cur.result(); cur.clear() }
+      else cur.append(c)
+    }
+    out += cur.result()
+    out.result()
+  }
+
+  test("the line splitter keeps the char-by-char definition over generated lines") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // separators, escapes, quotes and a trailing backslash are the cases the
+    // two definitions could disagree on, so they dominate the alphabet
+    val char = Gen.frequency(4 -> Gen.oneOf(' ', ',', '=', '\\', '"', '#'),
+      3 -> Gen.oneOf('a', 'b', 'x', '1', '5', '.', 'i', 't'), 1 -> Gen.choose('\u0000', '\u00ff'))
+    val line = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, char)).map(_.mkString)
+    val typed = Gen.oneOf("""m,t\ a=b\,c f=1.5,g=2i,h=true,s="x\"y z" 17""",
+      "m f=1 \\", "# c", "\"a b\" c", "m,k=\\ f=\"\\\"\"")
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAll(Gen.frequency(9 -> line, 1 -> typed)) { l =>
+        Seq(' ', ',', '=').forall(sep => LineProtocol.splitUnescaped(l, sep) == splitByChars(l, sep))
+      })
+    assert(res.passed, res.status.toString)
+  }
+
   test("result renderer groups series by tags with time first") {
     val df = Seq(("a", 1.0, new java.sql.Timestamp(1000)), ("b", 2.0, new java.sql.Timestamp(2000)))
       .toDF("host", "v", "time")
