@@ -8,12 +8,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 
-/** Spark extensions entry point: registers graft's native expressions and
+/** Spark extensions entry point: injects graft's SQL functions and
   * planner rules at session build time, so a cluster user enables the
   * whole library with
   *   spark.sql.extensions=graft.GraftExtensions
-  * and gets `graft_dot` / `graft_minhash16` in SQL and Column-land on every
-  * session, no per-session registration calls. `Graft.EngineConf` sets it. */
+  * and gets `graft_dot`, `graft_minhash16`, `graft_shingles3` and
+  * `graft_isect` in SQL on every session. This is the only name-bound
+  * surface: Column-land builds its native expressions directly
+  * (org.apache.spark.sql.graft.ColumnBridge). `Graft.EngineConf` sets it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {

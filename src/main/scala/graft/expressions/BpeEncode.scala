@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -73,16 +72,4 @@ case class BpeEncode(child: Expression, model: graft.llm.Bpe.BpeModel)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object BpeEncode {
-  /** Register a name content-hashed to the merge table. */
-  def register(spark: SparkSession, model: graft.llm.Bpe.BpeModel): String = {
-    val sig = graft.llm.TextOps.jvmH60(
-      model.merges.map { case (a, b) => s"$a $b" }.mkString("|")) & 0xffffffffL
-    val name = s"graft_bpe_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BpeEncode(exprs.head, model), "built-in")
-    name
-  }
 }

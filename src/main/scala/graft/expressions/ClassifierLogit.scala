@@ -3,7 +3,6 @@ package graft.expressions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,15 +89,4 @@ case class ClassifierLogit(child: Expression, weights: Array[Double], dim: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object ClassifierLogit {
-  def register(spark: SparkSession, weights: Seq[Double], dim: Int): String = {
-    val arr = weights.toArray
-    val sig = (java.util.Arrays.hashCode(arr).toLong & 0xffffffffL) ^ (dim.toLong << 32)
-    val name = s"graft_clslogit_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ClassifierLogit(exprs.head, arr, dim), "built-in")
-    name
-  }
 }

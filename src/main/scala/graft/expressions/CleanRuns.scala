@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -94,13 +93,4 @@ case class CleanRuns(left: Expression, right: Expression,
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CleanRuns {
-  def register(spark: SparkSession, n: Int, margin: Int, minKeepTokens: Int): String = {
-    val name = s"graft_cleanruns_${n}_${margin}_$minKeepTokens"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => CleanRuns(exprs.head, exprs(1), n, margin, minKeepTokens), "built-in")
-    name
-  }
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -119,15 +118,4 @@ case class DemoteHeavy(child: Expression, heavy: Seq[Long])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object DemoteHeavy {
-  /** Register a name content-hashed to the heavy list. */
-  def register(spark: SparkSession, heavy: Seq[Long]): String = {
-    val sig = graft.llm.TextOps.jvmH60(heavy.mkString(",")) & 0xffffffffL
-    val name = s"graft_demote_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => DemoteHeavy(exprs.head, heavy), "built-in")
-    name
-  }
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -15,6 +14,8 @@ import org.apache.spark.sql.types._
   *
   * Semantics: elements are widened exactly to double; iteration runs to the
   * shorter length; array elements are assumed non-null (embedding vectors).
+  * Column-land builds it in [[graft.llm.Similarity.dot]]; SQL reaches it as
+  * `graft_dot` ([[graft.GraftExtensions]]).
   */
 case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -76,12 +77,4 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** Register `graft_dot` so Column-land can reach the expression via
-    * call_function (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
 }

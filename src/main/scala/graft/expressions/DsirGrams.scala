@@ -3,7 +3,6 @@ package graft.expressions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,15 +77,6 @@ case class DsirGramBuckets(child: Expression, buckets: Int)
     copy(child = newChild)
 }
 
-object DsirGramBuckets {
-  def register(spark: SparkSession, buckets: Int): String = {
-    val name = s"graft_dsirb_$buckets"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => DsirGramBuckets(exprs.head, buckets), "built-in")
-    name
-  }
-}
-
 /** Integer fold of a bounded literal table over a bucket-id array: the
   * exact sum of `aggregate(arr, 0L, (acc, b) -> acc + lam(b))` — long
   * adds, order-preserving (long addition is associative anyway, but the
@@ -140,15 +130,4 @@ case class LamMicroSum(child: Expression, lam: Array[Long])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object LamMicroSum {
-  def register(spark: SparkSession, lam: Array[Long]): String = {
-    val sig = graft.llm.TextOps.jvmH60(java.util.Arrays.hashCode(lam).toString +
-      "|" + lam.length) & 0xffffffffL
-    val name = s"graft_lamsum_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LamMicroSum(exprs.head, lam), "built-in")
-    name
-  }
 }

@@ -2,7 +2,6 @@ package graft.expressions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -147,13 +146,4 @@ case class GopherFeatures(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object GopherFeatures {
-  def register(spark: SparkSession): String = {
-    val name = "graft_gopher"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => GopherFeatures(exprs.head), "built-in")
-    name
-  }
 }

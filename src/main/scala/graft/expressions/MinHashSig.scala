@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -88,15 +87,4 @@ case class MinHashSig(child: Expression, consts: Seq[(Long, Long)]) extends Unar
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object MinHashSig {
-  /** Register `graft_minhash<k>` bound to the standard constant family. */
-  def register(spark: SparkSession, k: Int): String = {
-    val name = s"graft_minhash$k"
-    val consts = graft.llm.TextOps.minhashConsts(k)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinHashSig(exprs.head, consts), "built-in")
-    name
-  }
 }

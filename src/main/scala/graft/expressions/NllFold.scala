@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -65,20 +64,6 @@ case class UnigramNllSum(child: Expression, lp: Map[String, Double], oov: Double
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object UnigramNllSum {
-  /** Register a name content-hashed to the model (vocabularies differ per
-    * training run; plans resolve the function at analysis time, so the
-    * bound model rides with the resolved expression). */
-  def register(spark: SparkSession, lp: Map[String, Double], oov: Double): String = {
-    val sig = graft.llm.TextOps.jvmH60(
-      lp.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",") + s"|$oov") & 0xffffffffL
-    val name = s"graft_uninll_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => UnigramNllSum(exprs.head, lp, oov), "built-in")
-    name
-  }
 }
 
 /** Fused interpolated-bigram log-likelihood fold — the exact arithmetic of
@@ -175,17 +160,4 @@ case class BigramNllSum(child: Expression, uniP: Map[String, Double], oovP: Doub
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object BigramNllSum {
-  def register(spark: SparkSession, uniP: Map[String, Double], oovP: Double,
-      biP: Map[String, Double], lambda: Double): String = {
-    val sig = graft.llm.TextOps.jvmH60(
-      uniP.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",") + s"|$oovP|$lambda|" +
-        biP.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")) & 0xffffffffL
-    val name = s"graft_binll_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BigramNllSum(exprs.head, uniP, oovP, biP, lambda), "built-in")
-    name
-  }
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -111,17 +110,4 @@ case class PqCodes(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object PqCodes {
-  /** Register a name bound to this codebook (content-hashed so two models
-    * coexist in one session). */
-  def register(spark: SparkSession, codebooks: Seq[Seq[Seq[Double]]]): String = {
-    val sig = graft.llm.TextOps.jvmH60(
-      codebooks.flatten.flatten.mkString(",")) & 0xffffffffL
-    val name = s"graft_pqcodes_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PqCodes(exprs.head, codebooks), "built-in")
-    name
-  }
 }

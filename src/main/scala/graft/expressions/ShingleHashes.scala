@@ -3,7 +3,6 @@ package graft.expressions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -107,18 +106,4 @@ case class ShingleHashes(child: Expression, n: Int, distinct: Boolean,
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object ShingleHashes {
-  /** Register `graft_shingles<n>[_all][_strict]` (distinct unless `_all`;
-    * `_strict` drops sub-n-token documents instead of emitting their whole
-    * token string as one shingle). */
-  def register(spark: SparkSession, n: Int, distinct: Boolean = true,
-      wholeDocIfShort: Boolean = true): String = {
-    val name = s"graft_shingles$n" + (if (distinct) "" else "_all") +
-      (if (wholeDocIfShort) "" else "_strict")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHashes(exprs.head, n, distinct, wholeDocIfShort), "built-in")
-    name
-  }
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,14 +78,4 @@ case class SimHashBits(child: Expression, bits: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object SimHashBits {
-  /** Register `graft_simhash<bits>`. */
-  def register(spark: SparkSession, bits: Int): String = {
-    val name = s"graft_simhash$bits"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SimHashBits(exprs.head, bits), "built-in")
-    name
-  }
 }

@@ -2,7 +2,6 @@ package graft.expressions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -105,15 +104,6 @@ case class C4Features(child: Expression, minKeptLines: Int)
     copy(child = newChild)
 }
 
-object C4Features {
-  def register(spark: SparkSession, minKeptLines: Int): String = {
-    val name = s"graft_c4_$minKeptLines"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => C4Features(exprs.head, minKeptLines), "built-in")
-    name
-  }
-}
-
 /** One-pass length/stopword/alpha quality features — the exact fields of
   * [[graft.llm.TextOps.qualityFeatures]] (unrounded; rounding stays in
   * TextOps). */
@@ -185,15 +175,6 @@ case class QualityFeatures(child: Expression, enStopwords: Seq[String])
     copy(child = newChild)
 }
 
-object QualityFeatures {
-  def register(spark: SparkSession, enStopwords: Seq[String]): String = {
-    val name = "graft_quality"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => QualityFeatures(exprs.head, enStopwords), "built-in")
-    name
-  }
-}
-
 /** One-pass Gopher repetition signals — the exact fields of
   * [[graft.llm.TextOps.repetitionFeatures]] (unrounded). The staged
   * top-token fold is O(|distinct|·|toks|); one hash-count pass makes it
@@ -256,15 +237,6 @@ case class RepetitionFeatures(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object RepetitionFeatures {
-  def register(spark: SparkSession): String = {
-    val name = "graft_repetition"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => RepetitionFeatures(exprs.head), "built-in")
-    name
-  }
 }
 
 /** One-pass stopword language ID over a TOKEN ARRAY — the exact semantics
@@ -346,15 +318,6 @@ case class LangIdFeature(child: Expression, langWords: Seq[(String, Seq[String])
     copy(child = newChild)
 }
 
-object LangIdFeature {
-  def register(spark: SparkSession): String = {
-    val name = "graft_langid"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LangIdFeature(exprs.head, graft.llm.TextOps.stopwords), "built-in")
-    name
-  }
-}
-
 /** In-vocabulary adjacent token pairs for bigram-LM training — the exact
   * pair stream of [[graft.llm.LangModel.bigramTrain]]'s staged
   * `transform(sequence(...), struct(toks[i], toks[i+1]))` + explode +
@@ -414,18 +377,4 @@ case class VocabBigrams(child: Expression, vocab: Seq[String])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object VocabBigrams {
-  def register(spark: SparkSession, vocab: Seq[String]): String = {
-    // separator escaped explicitly ("\u0001" was a raw control byte that
-    // rendered invisibly — reviewers read it as mkString("")); a 0x01 never
-    // appears in whitespace-split tokens, so concatenation-ambiguous
-    // vocabularies keep distinct registered names
-    val sig = graft.llm.TextOps.jvmH60(vocab.mkString("\u0001")) & 0xffffffffL
-    val name = s"graft_vbigrams_$sig"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => VocabBigrams(exprs.head, vocab), "built-in")
-    name
-  }
 }

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Byte-pair-encoding tokenization (Sennrich et al. 2016, "Neural Machine
   * Translation of Rare Words with Subword Units") — the real subword
@@ -136,7 +137,7 @@ object Bpe {
   /** Distributed encode: adds `subwords` (array<string>) — whitespace
     * tokens each greedily merged under the model, concatenated in order. */
   def encode(docs: DataFrame, textCol: String, model: BpeModel): DataFrame = {
-    val fn = graft.expressions.BpeEncode.register(docs.sparkSession, model)
-    docs.withColumn("subwords", call_function(fn, col(textCol)))
+    docs.withColumn("subwords", ColumnBridge.column(graft.expressions.BpeEncode(
+      ColumnBridge.expression(col(textCol)), model)))
   }
 }

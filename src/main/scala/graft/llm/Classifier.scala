@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Learned text classification for training-data curation — the
   * fastText-style linear classifier real pipelines train to keep
@@ -143,11 +144,10 @@ object Classifier {
     // staged ≡ scoreDriver); removes the interpreted HOF chain and — the
     // dominant cost — a per-token element_at into a dim-sized (65536)
     // array LITERAL.
-    val fn = graft.expressions.ClassifierLogit.register(
-      docs.sparkSession, model.weights, model.dim)
+    val logit = ColumnBridge.column(graft.expressions.ClassifierLogit(
+      ColumnBridge.expression(col(textCol)), model.weights.toArray, model.dim))
     docs.withColumn("score",
-      round(lit(1.0) / (lit(1.0) +
-        exp(-(call_function(fn, col(textCol)) + lit(model.bias)))), prec))
+      round(lit(1.0) / (lit(1.0) + exp(-(logit + lit(model.bias)))), prec))
   }
 
   /** The staged builtin composition of [[score]] — the semantic reference

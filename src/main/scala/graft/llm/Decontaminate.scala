@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Benchmark decontamination — the training-data pipeline step that flags
   * documents overlapping an evaluation/benchmark set before training, so
@@ -48,10 +49,10 @@ object Decontaminate {
     // (8 bytes/gram vs the gram text) and the exploded corpus rows.
     // strict mode: sub-n-token documents contribute nothing (they cannot
     // share an n-gram), matching the oracle's empty range over short docs.
-    val fn = graft.expressions.ShingleHashes.register(
-      docs.sparkSession, n, distinct = true, wholeDocIfShort = false)
     def grams(df: DataFrame, as: String) = df
-      .select(col(idCol).as(as), explode(call_function(fn, col(textCol))).as("gram"))
+      .select(col(idCol).as(as), explode(ColumnBridge.column(graft.expressions.ShingleHashes(
+        ColumnBridge.expression(col(textCol)), n, distinct = true,
+        wholeDocIfShort = false))).as("gram"))
     // (bench_id, gram) pairs are already distinct per document; no extra
     // cross-document distinct is needed (ids differ across documents)
     val bg0 = grams(bench, "bench_id")
@@ -105,15 +106,14 @@ object Decontaminate {
     require(n >= 1, "n-gram size must be positive")
     require(margin >= 0, "margin must be >= 0")
     require(minKeepTokens >= 1, "minKeepTokens must be >= 1")
-    val spark = docs.sparkSession
     val contIds = contamination(docs, bench, idCol, textCol, n, minOverlap, maxGramDf)
       .select(col("doc_id").as(idCol)).distinct()
     // bench gram SET (distinct across the whole benchmark, df-capped like
     // contamination's join side)
-    val fn = graft.expressions.ShingleHashes.register(
-      spark, n, distinct = true, wholeDocIfShort = false)
     val bgPerDoc = bench.select(col(idCol).as("bench_id"),
-      explode(call_function(fn, col(textCol))).as("gram"))
+      explode(ColumnBridge.column(graft.expressions.ShingleHashes(
+        ColumnBridge.expression(col(textCol)), n, distinct = true,
+        wholeDocIfShort = false))).as("gram"))
     val bg = (if (maxGramDf == Long.MaxValue) bgPerDoc
       else bgPerDoc.join(
         bgPerDoc.groupBy("gram").agg(count(lit(1)).as("__bdf"))
@@ -137,10 +137,10 @@ object Decontaminate {
     * shuffle. */
   private[graft] def positionalGrams(
       docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val fn = graft.expressions.ShingleHashes.register(
-      docs.sparkSession, n, distinct = false, wholeDocIfShort = false)
     docs.select(col(idCol),
-        posexplode(call_function(fn, col(textCol))).as(Seq("pos0", "gram")))
+        posexplode(ColumnBridge.column(graft.expressions.ShingleHashes(
+          ColumnBridge.expression(col(textCol)), n, distinct = false,
+          wholeDocIfShort = false))).as(Seq("pos0", "gram")))
       .select(col(idCol), (col("pos0") + 1).as("pos"), col("gram"))
   }
 
@@ -167,12 +167,11 @@ object Decontaminate {
     // array copies, and on span-dedup inputs MOST documents take it;
     // fragment text still slices/joins through the same builtins, so
     // output rows are byte-identical
-    val fn = graft.expressions.CleanRuns.register(
-      docs.sparkSession, n, margin, minKeepTokens)
     val fragged = cd.join(badPos, Seq(idCol))
       .select(col(idCol), col("toks"),
-        posexplode(call_function(fn, col("ntok"), col("badPos")))
-          .as(Seq("frag_idx", "r")))
+        posexplode(ColumnBridge.column(graft.expressions.CleanRuns(
+          ColumnBridge.expression(col("ntok")), ColumnBridge.expression(col("badPos")),
+          n, margin, minKeepTokens))).as(Seq("frag_idx", "r")))
       .select(col(idCol), col("frag_idx").cast("long").as("frag_idx"),
         array_join(slice(col("toks"), col("r.s"), col("r.l")), " ").as("frag_text"),
         col("r.l").cast("long").as("n_tok"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -40,10 +41,8 @@ object Dedup {
     * (graft.expressions.ShingleHashes) — one JVM pass per document instead
     * of the interpreted tokens→shingles→md5→distinct HOF chain. */
   private[graft] def shingleHashes(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    // register on the frame's own session — resolution happens there, and
-    // the caller's thread-local active session is not guaranteed to match
-    val fn = graft.expressions.ShingleHashes.register(docs.sparkSession, n)
-    docs.select(col(idCol).as("doc_id"), call_function(fn, col(textCol)).as("sh"))
+    docs.select(col(idCol).as("doc_id"), ColumnBridge.column(graft.expressions.ShingleHashes(
+      ColumnBridge.expression(col(textCol)), n, distinct = true)).as("sh"))
   }
 
   /** Exact duplicate marking: every row keeps its content hash and the
@@ -248,7 +247,6 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 4, rows: Int = 4): DataFrame = {
     require(bands * rows == k, "bands*rows must equal k")
-    graft.expressions.MinHashSig.register(docs.sparkSession, k)
     val sigs = shingleHashes(docs, idCol, textCol, 3)
       .select(col("doc_id"), TextOps.minhashSigFromHashes(col("sh"), k).as("sig"))
     sigs.select(col("doc_id"), col("sig"),
@@ -269,12 +267,11 @@ object Dedup {
     // old 32-bit hash left 8-bit chunks whose 256 buckets collide
     // quadratically once the corpus outgrows a few thousand docs
     val chunkBits = 60 / chunks
-    val tokFn = graft.expressions.ShingleHashes.register(
-      docs.sparkSession, 1, distinct = false)
-    val shFn = graft.expressions.SimHashBits.register(docs.sparkSession, 60)
     val hashed = docs
-      .select(col(idCol).as("doc_id"), call_function(tokFn, col(textCol)).as("ths"))
-      .select(col("doc_id"), call_function(shFn, col("ths")).as("sh"))
+      .select(col(idCol).as("doc_id"), ColumnBridge.column(graft.expressions.ShingleHashes(
+        ColumnBridge.expression(col(textCol)), 1, distinct = false)).as("ths"))
+      .select(col("doc_id"), ColumnBridge.column(graft.expressions.SimHashBits(
+        ColumnBridge.expression(col("ths")), 60)).as("sh"))
     // one 64-bit hash per doc: materialize before the fan-out (see
     // minhashLsh for rationale)
     val blocked = hashed.select(col("doc_id"), col("sh"),
@@ -340,9 +337,9 @@ object Dedup {
     // exact verification on the full hashed sets
     val setsA = sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a"), col("nsh").as("n_a"))
     val setsB = sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b"), col("nsh").as("n_b"))
-    graft.expressions.IntersectCountSorted.register(docs.sparkSession)
     val verified = candidates.join(setsA, "id_a").join(setsB, "id_b")
-      .withColumn("common", call_function("graft_isect", col("sh_a"), col("sh_b")))
+      .withColumn("common", ColumnBridge.column(graft.expressions.IntersectCountSorted(
+        ColumnBridge.expression(col("sh_a")), ColumnBridge.expression(col("sh_b")))))
       .withColumn("jaccard",
         round(col("common").cast("double") / (col("n_a") + col("n_b") - col("common")), 6))
       .filter(col("jaccard") >= threshold)
@@ -401,11 +398,8 @@ object Dedup {
     // pinning it, and at 100 TB it's the one table you must never cache.
     val ordered =
       if (heavy.isEmpty) col("sh")
-      else {
-        val fn = graft.expressions.DemoteHeavy.register(
-          sets.sparkSession, heavy.toSeq)
-        call_function(fn, col("sh"))
-      }
+      else ColumnBridge.column(graft.expressions.DemoteHeavy(
+        ColumnBridge.expression(col("sh")), heavy.toSeq))
     val pos = sets
       .select(col("doc_id"), col("nsh"), posexplode(ordered).as(Seq("__idx", "shingle")))
       .filter(col("__idx") + 1 <= col("nsh") - ceil(col("nsh") * threshold) + 1)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Unigram language-model scoring for training-data quality filtering —
   * the CCNet/Gopher-style "perplexity filter" step: score every document
@@ -110,11 +111,10 @@ object LangModel {
       // pair stream, NativeExprParitySpec pins it); vocabulary membership
       // filters BEFORE the aggregation so the pair shuffle is vocab², not
       // corpus²
-      val fn = graft.expressions.VocabBigrams.register(
-        toks.sparkSession, vocabSet)
       val pairs = toks
         .filter(size(col("toks")) > 1)
-        .select(explode(call_function(fn, col("toks"))).as("p"))
+        .select(explode(ColumnBridge.column(graft.expressions.VocabBigrams(
+          ColumnBridge.expression(col("toks")), vocabSet))).as("p"))
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(topB)
@@ -138,13 +138,13 @@ object LangModel {
     * LlmSpec pins native ≡ staged). */
   def avgNllBigram(docs: DataFrame, idCol: String, textCol: String,
       model: BigramModel): DataFrame = {
-    val fn = graft.expressions.BigramNllSum.register(
-      docs.sparkSession, model.uniP, model.oovP, model.biP, model.lambda)
+    val nll = ColumnBridge.column(graft.expressions.BigramNllSum(
+      ColumnBridge.expression(col("toks")), model.uniP, model.oovP, model.biP, model.lambda))
     docs
       .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col(idCol), size(col("toks")).cast("long").as("n_tok"),
-        round(-call_function(fn, col("toks")) / size(col("toks")), 5).as("avg_nll"))
+        round(-nll / size(col("toks")), 5).as("avg_nll"))
   }
 
   /** The staged builtin composition of [[avgNllBigram]]'s fold — kept as
@@ -189,13 +189,13 @@ object LangModel {
     * staged tree WAS the scoring stage; LlmSpec pins native ≡ staged). */
   def avgNllToks(toksDf: DataFrame, idCol: String, toksCol: String,
       model: UnigramModel): DataFrame = {
-    val fn = graft.expressions.UnigramNllSum.register(
-      toksDf.sparkSession, model.lp, model.oovLp)
+    val nll = ColumnBridge.column(graft.expressions.UnigramNllSum(
+      ColumnBridge.expression(col("toks")), model.lp, model.oovLp))
     toksDf
       .select(col(idCol), col(toksCol).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col(idCol), size(col("toks")).cast("long").as("n_tok"),
-        round(-call_function(fn, col("toks")) / size(col("toks")), 5).as("avg_nll"))
+        round(-nll / size(col("toks")), 5).as("avg_nll"))
   }
 
   /** The staged builtin composition of [[avgNllToks]]'s fold — kept as the

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Data-mixing operators: deterministic domain-weighted sampling for
   * assembling a training corpus from heterogeneous sources.
@@ -302,9 +303,9 @@ object Mix {
     // md5→substring→conv stack. Identical bucket ids feed both the
     // distribution aggregate and the scoring fold, so counts, the
     // log-ratio literal, and every score are unchanged (LlmSpec pins it).
-    val fnB = graft.expressions.DsirGramBuckets.register(df.sparkSession, buckets)
     val base = df
-      .withColumn("__bkts", call_function(fnB, coalesce(col(textCol), lit(""))))
+      .withColumn("__bkts", ColumnBridge.column(graft.expressions.DsirGramBuckets(
+        ColumnBridge.expression(coalesce(col(textCol), lit(""))), buckets)))
       .withColumn("__tgt", isTarget)
     // pass 1: both bucket distributions in one aggregate
     val counts = base
@@ -331,8 +332,8 @@ object Mix {
     // pass 2: shuffle-free scoring of the raw (non-target) side — the
     // integer fold over the bounded log-ratio table runs native
     // ([[graft.expressions.LamMicroSum]]; long adds, order-exact)
-    val fnL = graft.expressions.LamMicroSum.register(df.sparkSession, lamMicro.toArray)
-    val logw = call_function(fnL, col("__bkts")).cast("double") / lit(1000000.0)
+    val logw = ColumnBridge.column(graft.expressions.LamMicroSum(
+      ColumnBridge.expression(col("__bkts")), lamMicro.toArray)).cast("double") / lit(1000000.0)
     // deterministic Gumbel: u from md5(id) in (0,1), g = -ln(-ln(u))
     val u = (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
       .cast("long") % 1000000L + lit(0.5)) / lit(1000000.0)

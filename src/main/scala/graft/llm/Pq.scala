@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Product quantization for ANN at memory scale (Jégou et al., "Product
   * Quantization for Nearest Neighbor Search", TPAMI 2011 — the IVF-PQ /
@@ -92,8 +93,8 @@ object Pq {
     * of an interpreted HOF tree. Adds `codes` (array<int>, 0-based
     * codeword per subspace). */
   def pqEncode(df: DataFrame, vecCol: String, model: PqModel): DataFrame = {
-    val fn = graft.expressions.PqCodes.register(df.sparkSession, model.codebooks)
-    df.withColumn("codes", call_function(fn, col(vecCol).cast("array<double>")))
+    df.withColumn("codes", ColumnBridge.column(graft.expressions.PqCodes(
+      ColumnBridge.expression(col(vecCol).cast("array<double>")), model.codebooks)))
   }
 
   /** IVF-PQ k-NN: coarse IVF candidate lists + ADC scoring on PQ codes +
@@ -114,7 +115,6 @@ object Pq {
       pq: PqModel,
       nprobe: Int = 2,
       refine: Int = 4): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     val n = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"), Similarity.norm(col(vecCol)).as("nrm"))
     val model = Similarity.collectCenters(centroids)

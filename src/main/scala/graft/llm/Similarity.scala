@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Similarity search over embedding columns (`array<float>`): brute-force
   * cosine top-k as the exactness baseline, and a random-hyperplane LSH
@@ -22,10 +23,9 @@ object Similarity {
     * `aggregate(zip_with(...))` but it stays inside whole-stage codegen,
     * which is the difference between interpreted HOF folds and a primitive
     * loop on an all-pairs similarity join. */
-  def dot(a: Column, b: Column): Column = {
-    graft.expressions.DotProduct.register(org.apache.spark.sql.SparkSession.active)
-    call_function("graft_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(graft.expressions.DotProduct(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -41,7 +41,6 @@ object Similarity {
     * near-duplicate report is [[nearDupPairsLsh]]; LlmSpec uses this one
     * as its oracle on small data. */
   def topSimilarPairs(emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     val n = emb.select(col(idCol).as("vid"), col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
     val a = n.select(col("vid").as("id_a"), col("v").as("v_a"), col("nrm").as("n_a"))
     val b = n.select(col("vid").as("id_b"), col("v").as("v_b"), col("nrm").as("n_b"))
@@ -63,7 +62,6 @@ object Similarity {
     * corpus vectors (self excluded). The query side is broadcast — the
     * corpus side streams through in one pass, no shuffle of the big side. */
   def knnBrute(emb: DataFrame, idCol: String, vecCol: String, queryPred: Column, k: Int): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     // queryPred references the normalized id column "vid"
     val n = emb.select(col(idCol).as("vid"), col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
     val q = n.filter(queryPred)
@@ -96,7 +94,6 @@ object Similarity {
       k: Int,
       centroids: DataFrame,
       nprobe: Int = 2): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     val n = emb.select(col(idCol).as("vid"), col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
     // the coarse quantizer is a model object (O(nlist·dim)) — pull it to
     // the driver once and ride it into every task as a literal, so
@@ -241,7 +238,6 @@ object Similarity {
     * Output: (vid, cid, cos, z, outlier). */
   def embedOutliers(emb: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, zThreshold: Double = 2.0): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     val n = emb.select(col(idCol).as("vid"), col(vecCol).as("v"),
       norm(col(vecCol)).as("nrm"))
     val model = collectCenters(centroids)
@@ -362,7 +358,6 @@ object Similarity {
       prec: Int = 6,
       maxCell: Int = 4096,
       cellAnchors: Int = 8): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     val n = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"), norm(col(vecCol)).as("nrm"))
     val model = collectCenters(centroids)
@@ -399,7 +394,6 @@ object Similarity {
       maxBucket: Int = 4096,
       bucketAnchors: Int = 8,
       targetBucket: Int = 64): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     val n = emb.select(col(idCol).as("vid"), col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
     // Scale-aware bucket granularity: with a FIXED plane count, expected
     // bucket size is N/2^planes — linear in the corpus — and within-bucket
@@ -475,7 +469,6 @@ object Similarity {
       planes: Int = 8,
       dim: Int = 64,
       targetBucket: Int = 64): DataFrame = {
-    graft.expressions.DotProduct.register(emb.sparkSession)
     val effPlanes = {
       val nVec = emb.count()
       val needed = math.ceil(
@@ -541,7 +534,6 @@ object Similarity {
     require(k >= 1, "k-means needs k >= 1")
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.expressions.DotProduct.register(spark)
     val ell = if (oversample > 0) oversample else 2 * k
     val callerPersisted = emb.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val n = emb.select(col(idCol).cast("string").as("vid"),

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, shingling, deterministic hashing, language ID, quality
@@ -33,9 +34,7 @@ object TextOps {
     * construction, pinned in NativeExprParitySpec against the staged
     * chain kept below). */
   def tokens(text: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.expressions.Tokens(
-        org.apache.spark.sql.graft.ColumnBridge.expression(text)))
+    ColumnBridge.column(graft.expressions.Tokens(ColumnBridge.expression(text)))
 
   /** The staged builtin composition of [[tokens]] — kept as the semantic
     * reference the native expression is pinned against. */
@@ -97,11 +96,9 @@ object TextOps {
     * computed once upstream in its own projection). Fused native expression
     * (graft.expressions.MinHashSig): one codegen'd pass computes all k
     * mins, versus k interpreted `array_min(transform(...))` trees. */
-  def minhashSigFromHashes(hashArr: Column, k: Int): Column = {
-    val name = graft.expressions.MinHashSig.register(
-      org.apache.spark.sql.SparkSession.active, k)
-    call_function(name, hashArr)
-  }
+  def minhashSigFromHashes(hashArr: Column, k: Int): Column =
+    ColumnBridge.column(graft.expressions.MinHashSig(
+      ColumnBridge.expression(hashArr), minhashConsts(k)))
 
   /** Reference composition of the same signature from builtins (used by
     * tests to pin the native expression's semantics). */
@@ -174,9 +171,8 @@ object TextOps {
     * ([[graft.expressions.LangIdFeature]]) instead of 5 interpreted
     * stopword-filter folds; NativeExprParitySpec pins native ≡ staged. */
   def langId(toks: Column): (Column, Column) = {
-    val fn = graft.expressions.LangIdFeature.register(
-      org.apache.spark.sql.SparkSession.active)
-    val f = call_function(fn, toks)
+    val f = ColumnBridge.column(graft.expressions.LangIdFeature(
+      ColumnBridge.expression(toks), stopwords))
     (f.getField("lang"), f.getField("score"))
   }
 
@@ -195,9 +191,8 @@ object TextOps {
     * score in [0,1]. Linear combination only (no transcendentals) so every
     * engine computes bit-identical doubles. */
   def qualityFeatures(text: Column): Seq[(String, Column)] = {
-    val fn = graft.expressions.QualityFeatures.register(
-      org.apache.spark.sql.SparkSession.active, stopwords.head._2)
-    val f = call_function(fn, text)
+    val f = ColumnBridge.column(graft.expressions.QualityFeatures(
+      ColumnBridge.expression(text), stopwords.head._2))
     Seq(
       "n_chars" -> f.getField("n_chars"),
       "n_tokens" -> f.getField("n_tokens"),
@@ -240,9 +235,8 @@ object TextOps {
     * O(|distinct|·|toks|) on documents, not corpus pairs. Ratios are
     * count-derived, so every engine rounds identically. */
   def repetitionFeatures(text: Column): Seq[(String, Column)] = {
-    val fn = graft.expressions.RepetitionFeatures.register(
-      org.apache.spark.sql.SparkSession.active)
-    val f = call_function(fn, text)
+    val f = ColumnBridge.column(graft.expressions.RepetitionFeatures(
+      ColumnBridge.expression(text)))
     Seq(
       "dup_word_ratio" -> round(f.getField("dup_word_ratio"), 6),
       "dup_2gram_ratio" -> round(f.getField("dup_2gram_ratio"), 6),
@@ -311,9 +305,8 @@ object TextOps {
     * Pure line-array expressions — per-document cost, no shuffle, no UDF;
     * the keep decision compares integer counts only. */
   def c4Features(text: Column, minKeptLines: Int = 2): Seq[(String, Column)] = {
-    val fn = graft.expressions.C4Features.register(
-      org.apache.spark.sql.SparkSession.active, minKeptLines)
-    val f = call_function(fn, text)
+    val f = ColumnBridge.column(graft.expressions.C4Features(
+      ColumnBridge.expression(text), minKeptLines))
     Seq(
       "n_lines" -> f.getField("n_lines"),
       "n_kept_lines" -> f.getField("n_kept_lines"),
@@ -370,9 +363,8 @@ object TextOps {
     * in the curate recipe; the native struct carries the UNROUNDED values
     * and the display rounding stays here. */
   def gopherRules(text: Column): Seq[(String, Column)] = {
-    val fn = graft.expressions.GopherFeatures.register(
-      org.apache.spark.sql.SparkSession.active)
-    val f = call_function(fn, text)
+    val f = ColumnBridge.column(graft.expressions.GopherFeatures(
+      ColumnBridge.expression(text)))
     Seq(
       "n_words" -> f.getField("n_words"),
       "mean_word_len" -> round(f.getField("mean_word_len"), 6),

@@ -8,11 +8,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *
   * Spark 4 wraps Columns around ColumnNodes and gates the direct
   * Expression constructors behind `private[sql]`
-  * (classic.ExpressionUtils). The function-registry hop the other natives
-  * use (`createOrReplaceTempFunction` + `call_function`) needs a
-  * SparkSession at construction time; expression factories that only see
-  * Columns (TextOps.tokens) use this bridge instead — same analysis-time
-  * binding, no registry state. */
+  * (classic.ExpressionUtils). Every native Column is built through this
+  * bridge at its call site, e.g.
+  * `column(Tokens(expression(text)))`: the expression instance is bound
+  * when the DataFrame is built and nothing is looked up by name in the
+  * session's function registry. SQL users reach the four natives
+  * `graft.GraftExtensions` injects (`graft_dot`, `graft_minhash16`,
+  * `graft_shingles3`, `graft_isect`); the rest are Column-only. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -11,8 +11,7 @@ class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("the test session installs GraftExtensions: functions and the small-sort rule") {
-    // a fresh session's registry holds only what the extensions inject,
-    // so no spec's explicit register() call can stand in for them
+    // a fresh session's registry holds only what the extensions inject
     Seq(spark, spark.newSession()).foreach { s =>
       val registry = s.sessionState.functionRegistry
       Seq("graft_dot", "graft_minhash16", "graft_shingles3", "graft_isect").foreach { f =>

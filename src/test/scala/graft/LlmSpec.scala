@@ -2,6 +2,7 @@ package graft
 
 import graft.llm.{Dedup, Similarity, TextOps}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 class LlmSpec extends SparkSpec {
   import spark.implicits._
@@ -161,8 +162,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("native shingle-hash expression matches the staged builtin pipeline") {
-    val fn = graft.expressions.ShingleHashes.register(spark, 3)
-    val tokFn = graft.expressions.ShingleHashes.register(spark, 1, distinct = false)
+    val text = ColumnBridge.expression(col("text"))
     val staged = corpus
       .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("text"), TextOps.shingles(col("toks"), 3).as("shw"), col("toks"))
@@ -171,8 +171,10 @@ class LlmSpec extends SparkSpec {
         transform(col("toks"), t => TextOps.h60(t)).as("builtin1"))
     val both = staged
       .select(
-        call_function(fn, col("text")).as("native3"), col("builtin3"),
-        call_function(tokFn, col("text")).as("native1"), col("builtin1"))
+        ColumnBridge.column(graft.expressions.ShingleHashes(text, 3, distinct = true))
+          .as("native3"), col("builtin3"),
+        ColumnBridge.column(graft.expressions.ShingleHashes(text, 1, distinct = false))
+          .as("native1"), col("builtin1"))
       .as[(Seq[Long], Seq[Long], Seq[Long], Seq[Long])].collect()
     both.foreach { case (n3, b3, n1, b1) =>
       assert(n3.toSet == b3.toSet && n3.length == b3.length)
@@ -181,13 +183,13 @@ class LlmSpec extends SparkSpec {
   }
 
   test("native sorted intersect count matches array_intersect") {
-    graft.expressions.IntersectCountSorted.register(spark)
     val df = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 9L, 11L)),
       (Seq(1L, 2L), Seq(3L, 4L)),
       (Seq.empty[Long], Seq(1L))).toDF("a", "b")
     val both = df.select(
-      call_function("graft_isect", col("a"), col("b")).as("native"),
+      ColumnBridge.column(graft.expressions.IntersectCountSorted(
+        ColumnBridge.expression(col("a")), ColumnBridge.expression(col("b")))).as("native"),
       size(array_intersect(col("a"), col("b"))).cast("long").as("builtin"))
       .as[(Long, Long)].collect()
     assert(both.forall { case (n, b) => n == b })

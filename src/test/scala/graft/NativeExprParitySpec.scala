@@ -2,6 +2,7 @@ package graft
 
 import graft.llm.{Classifier, LangModel, TextOps}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Pins the r21 fused native expressions bit-for-bit against the staged
   * builtin compositions they replaced (the optimization-round contract:
@@ -137,7 +138,6 @@ class NativeExprParitySpec extends SparkSpec {
 
   test("DsirGramBuckets: native bucket ids == staged md5-prefix bucketing") {
     val buckets = 64
-    val fn = graft.expressions.DsirGramBuckets.register(spark, buckets)
     val toks = filter(
       split(lower(trim(coalesce(col("text"), lit("")))), "\\s+"), t => t =!= "")
     val bigrams = when(size(toks) > lit(1),
@@ -151,7 +151,8 @@ class NativeExprParitySpec extends SparkSpec {
         g => conv(substring(md5(g), 1, 8), 16, 10).cast("long") % buckets).as("b"))
       .as[(Long, Seq[Long])].collect().toMap
     val native = docs.select(col("doc_id"),
-      call_function(fn, coalesce(col("text"), lit(""))).as("b"))
+      ColumnBridge.column(graft.expressions.DsirGramBuckets(
+        ColumnBridge.expression(coalesce(col("text"), lit(""))), buckets)).as("b"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(native == staged)
   }
@@ -194,7 +195,6 @@ class NativeExprParitySpec extends SparkSpec {
 
   test("VocabBigrams: native pair stream == staged transform+filter") {
     val vocab = Seq("the", "quick", "brown", "fox", "a", "b", "c", "und")
-    val fn = graft.expressions.VocabBigrams.register(spark, vocab)
     val toks = TextOps.tokens(col("text"))
     val stagedPairs = docs.select(col("doc_id"), toks.as("toks"))
       .filter(size(col("toks")) > 1)
@@ -206,7 +206,8 @@ class NativeExprParitySpec extends SparkSpec {
       .as[(Long, String, String)].collect().toSeq.sorted
     val nativePairs = docs.select(col("doc_id"), toks.as("toks"))
       .filter(size(col("toks")) > 1)
-      .select(col("doc_id"), explode(call_function(fn, col("toks"))).as("p"))
+      .select(col("doc_id"), explode(ColumnBridge.column(graft.expressions.VocabBigrams(
+        ColumnBridge.expression(col("toks")), vocab))).as("p"))
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
       .as[(Long, String, String)].collect().toSeq.sorted
     assert(nativePairs == stagedPairs && nativePairs.nonEmpty)
@@ -237,11 +238,11 @@ class NativeExprParitySpec extends SparkSpec {
 
   test("LamMicroSum: native fold == aggregate over the literal table") {
     val lam = Array.tabulate(64)(i => (i * 2654435761L) % 1000001L - 500000L)
-    val fn = graft.expressions.LamMicroSum.register(spark, lam)
     val lamCol = typedlit(lam.toSeq)
     val arrs = Seq(Seq(0L, 5L, 63L, 5L), Seq.empty[Long], Seq(17L)).toDF("a")
     val both = arrs.select(
-      call_function(fn, col("a")).as("n"),
+      ColumnBridge.column(graft.expressions.LamMicroSum(
+        ColumnBridge.expression(col("a")), lam)).as("n"),
       aggregate(col("a"), lit(0L),
         (acc, b) => acc + element_at(lamCol, (b + 1).cast("int"))).as("s"))
       .as[(Long, Long)].collect()

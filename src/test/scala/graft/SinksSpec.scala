@@ -80,11 +80,9 @@ class SinksSpec extends SparkSpec {
   }
 
   test("graft extensions inject native functions; SQL resolves them") {
-    // GraftExtensionsSpec checks the injected functions; the explicit
-    // register() calls resolve from SQL on a fresh session as well
+    // nothing registers these on the fresh session: SQL reaches the
+    // functions GraftExtensions injects, and they evaluate
     val s2 = spark.newSession()
-    graft.expressions.DotProduct.register(s2)
-    graft.expressions.MinHashSig.register(s2, 16)
     assert(s2.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
       .head().getDouble(0) == 11.0)
     assert(s2.sql("SELECT size(graft_minhash16(array(42L)))").head().getInt(0) == 16)
